@@ -15,6 +15,15 @@ input in deterministic PARTITION BUCKETS and commits a manifest per batch:
   driver-side bucket-set difference, so no Spark work is scheduled for
   committed data at all).
 
+Batches are pipelined, two in flight: batch k+1's Spark work (redact, raw
+write and read-back, data and metrics writes, error sample) runs on a
+driver worker thread while the caller's thread waits on and commits
+batch k. Commits stay on the caller's thread, strictly in batch order.
+So a crash can leave the files of two uncommitted batches behind (the one
+awaiting its commit and the one in flight), one more than a sequential
+loop; the resume rewrites both through ``overwrite`` like any uncommitted
+batch.
+
 This is the Parquet+manifest stand-in for an Iceberg catalog: with Iceberg
 jars on the cluster, swap the two ``write.parquet`` calls for
 ``writeTo(...).append()`` and the manifest for Iceberg's snapshot commit —
@@ -27,9 +36,13 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from pdfredact_spark.catalog import (
     LOCAL_LEDGER_STORAGE,
@@ -41,6 +54,13 @@ from pdfredact_spark.catalog import (
 from pdfredact_spark.model import Rule
 from pdfredact_spark.pipeline import REDACTED_SCHEMA, redact_full
 
+#: the raw batch output, read back with its schema given so no Spark job
+#: infers it (a new StructType: StructType.add would mutate REDACTED_SCHEMA)
+_RAW_SCHEMA = StructType(
+    REDACTED_SCHEMA.fields + [StructField("bucket", IntegerType(), True)]
+)
+#: the most error rows a manifest keeps
+_ERROR_SAMPLE = 100
 
 class KillSwitch(Exception):
     """Raised by tests to simulate a mid-run job kill."""
@@ -245,17 +265,26 @@ def run_resumable(
     leased run (a) blocks on a live foreign holder (loud timeout at
     ``lease_wait_sec``, default ttl+30), (b) reads ``committed_batches``
     only AFTER acquiring — a loser that waited out a winner re-processes
-    nothing, (c) renews the lease before each batch so the ttl need only
-    outlast ONE batch, failing loudly if the lease was usurped, and
-    (d) re-verifies ownership immediately before every manifest commit
-    (the streaming micro-batch check) so an outrun ttl with a real
-    usurper can never stamp a manifest over a possibly-raced batch. A
-    ``kill_after_batches`` "crash" deliberately does NOT release (a real
-    SIGKILL couldn't): the lease expires into takeover. Back-compat:
-    ``None`` (default) keeps the single-driver-per-out_dir contract
-    unleased, exactly as before. ``_hold_before_commit_sec`` is a
-    drive/test hook — park once, before the FIRST commit, while holding
-    the lease, so a second real driver's exclusion is provable.
+    nothing, (c) renews the lease before submitting each batch, failing
+    loudly if the lease was usurped, and (d) re-verifies ownership
+    immediately before every manifest commit (the streaming micro-batch
+    check) so an outrun ttl with a real usurper can never stamp a
+    manifest over a possibly-raced batch. A ``kill_after_batches``
+    "crash" deliberately does NOT release (a real SIGKILL couldn't): the
+    lease expires into takeover. Back-compat: ``None`` (default) keeps
+    the single-driver-per-out_dir contract unleased, exactly as before.
+    ``_hold_before_commit_sec`` is a drive/test hook — park once, before
+    the FIRST commit, while holding the lease, so a second real driver's
+    exclusion is provable.
+
+    Batches run two in flight (module docstring): batch k+1 materializes
+    on a driver worker thread, under the caller's job group, description
+    and tags, while batch k commits. The renewal before each submission
+    keeps the ttl needing to outlast only about one batch. Any exception
+    that ends the run, lease loss and ``KillSwitch`` included, first
+    cancels the Spark jobs of the batches still in flight, so a run that
+    will not commit them stops writing at once; a crash that skips it
+    leaves at most two uncommitted batches for the resume to overwrite.
     """
     lease_path = storage.join(out_dir, "run.lease")
     if lease_ttl_sec is not None:
@@ -282,6 +311,179 @@ def run_resumable(
             storage.release_lease(lease_path, lease_owner)
 
 
+def _check_committed(
+    out_dir: str, batch_id: int, lo: int, hi: int, n_buckets: int, config_fp: str
+) -> None:
+    """Refuse to skip a committed batch whose manifest does not match this
+    run's partitioning and config, or whose files changed since commit."""
+    # Config-drift guard: a committed manifest written under a
+    # DIFFERENT (n_buckets, buckets_per_batch) covers different
+    # bucket ranges — silently skipping it would drop or double
+    # documents. Resume must use the original partitioning.
+    with open(os.path.join(_commit_dir(out_dir), f"batch-{batch_id}.json")) as f:
+        manifest = json.load(f)
+    if manifest.get("buckets") != list(range(lo, hi)) or (
+        # the modulus matters even when ranges coincide: batch 0
+        # is [0,4) under both n_buckets=8 and 16, but pmod(h,8)
+        # and pmod(h,16) assign DIFFERENT documents to it. A
+        # manifest MISSING the field is a hard error too — it
+        # predates the guard, so its modulus is unverifiable and
+        # defaulting it to the current run's value would pass
+        # exactly the drift case the guard exists for (ADVICE r3).
+        manifest.get("n_buckets") != n_buckets
+    ):
+        raise ValueError(
+            f"batch {batch_id} was committed for buckets "
+            f"{manifest.get('buckets')} of {manifest.get('n_buckets')} "
+            f"but this run derives {list(range(lo, hi))} of {n_buckets} "
+            f"— resume with the original n_buckets/buckets_per_batch"
+        )
+    if manifest.get("config_fp") != config_fp:
+        # Rules/flatten drift (round-5 review): a committed batch
+        # redacted under DIFFERENT rules (or flatten toggle) must
+        # not be silently mixed with this run's output. A
+        # manifest missing the field predates the guard and is
+        # equally unverifiable — hard error, the n_buckets
+        # precedent.
+        raise ValueError(
+            f"batch {batch_id} was committed under config "
+            f"{manifest.get('config_fp')} but this run's rules/"
+            f"flatten fingerprint is {config_fp} — resume with "
+            "the original rules and flatten setting (or use a "
+            "fresh out_dir)"
+        )
+    listing = _data_file_listing(out_dir, batch_id)
+    raw_listing = _data_file_listing(out_dir, batch_id, "raw")
+    if manifest.get("raw_files") != raw_listing:
+        raise ValueError(
+            f"batch {batch_id}'s raw files do not match its "
+            f"committed manifest: the raw dir (read_errors' "
+            f"source) was modified after commit, or the manifest "
+            f"predates the integrity guard. Re-run this out_dir "
+            f"from scratch or restore the committed files."
+        )
+    if manifest.get("data_files") != listing:
+        # Data-integrity guard (round-7 cont. third pass): the
+        # files now present differ from what the committing run
+        # stamped — a zombie runner's late file-moves, manual
+        # tampering, or a partial restore. Mixing them in (or
+        # silently serving fewer rows) is exactly the loss the
+        # manifest exists to prevent. A manifest MISSING the
+        # field predates the guard: unverifiable, hard error
+        # (the n_buckets precedent — manifest v3).
+        n_rec = manifest.get("data_files")
+        raise ValueError(
+            f"batch {batch_id}'s data files do not match its "
+            f"committed manifest (recorded "
+            f"{'<absent>' if n_rec is None else len(n_rec)} "
+            f"files, found {len(listing)}): the batch dir was "
+            f"modified after commit (zombie writer, tampering, "
+            f"partial restore) or the manifest predates the "
+            f"integrity guard. Re-run this out_dir from scratch "
+            f"or restore the committed files."
+        )
+
+
+def _materialize(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    lo: int,
+    hi: int,
+    rules: list[Rule],
+    flatten: bool,
+    n_buckets: int,
+    run_id: str,
+) -> tuple[int, list[dict]]:
+    """Write batch ``batch_id``'s raw, data and metrics dirs and return
+    ``(n_errors, error sample)`` for its manifest. Spark work only — it
+    touches no commit-log or lease state, so it runs on a worker thread
+    while the caller commits the batch before it."""
+    batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
+    # Materialize the single-pass result ONCE; good/error views are then
+    # derived from the written files (no recompute of the Python stage).
+    full = redact_full(batch.select("doc_id", "spans"), rules, flatten)
+    full = full.withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    )
+    raw_path = os.path.join(out_dir, "raw", f"batch={batch_id}")
+    full.write.mode("overwrite").parquet(raw_path)
+    # the schema is known: giving it skips the footer-inference job
+    full = spark.read.schema(_RAW_SCHEMA).parquet(raw_path)
+
+    out = full.where(F.col("error").isNull()).select(
+        "doc_id", "spans", "n_rule_hits",
+        F.size("spans").cast("long").alias("n_spans"), "bucket",
+    )
+    errs = full.where(F.col("error").isNotNull()).select("doc_id", "error")
+
+    data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
+    # Hive-partitioned by bucket: downstream reads of specific buckets
+    # prune partitions at planning time (asserted in test_plan_quality).
+    (
+        out.select("doc_id", "spans", "bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(data_path)
+    )
+
+    # Lineage rows: one per bucket (the resume partition unit).
+    metrics = (
+        out.groupBy("bucket")
+        .agg(
+            F.min("doc_id").alias("doc_id_min"),
+            F.max("doc_id").alias("doc_id_max"),
+            F.count("*").alias("n_docs"),
+            F.sum("n_spans").alias("n_spans"),
+            F.sum("n_rule_hits").alias("n_rule_hits"),
+            F.sum(
+                F.aggregate(
+                    "spans",
+                    F.lit(0).cast("long"),
+                    lambda acc, s: acc + F.length(s.text) + F.length(s.media_ref) + 8,
+                )
+            ).alias("bytes_processed"),
+        )
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("partition_id", F.col("bucket"))
+    )
+    metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
+    metrics.write.mode("overwrite").parquet(metrics_path)
+
+    # Bounded error sample: the manifest keeps at most _ERROR_SAMPLE rows,
+    # so never ship more than that to the driver (a high-error-rate corpus
+    # must not OOM the driver). A short sample IS every error, so the
+    # separate count scan runs only when the sample is full.
+    err_rows = errs.limit(_ERROR_SAMPLE).collect()
+    n_errors = len(err_rows) if len(err_rows) < _ERROR_SAMPLE else errs.count()
+    return n_errors, [{"doc_id": r["doc_id"], "error": r["error"]} for r in err_rows]
+
+
+def _tagged(sc, tag: str, fn, *args):
+    """Run ``fn`` with every Spark job it starts carrying job tag ``tag``.
+    A SparkContext job tag, not a session tag: ``SparkSession.interruptTag``
+    resolves a tag through the CALLING thread's own tag map, so from the
+    committing thread it cancels nothing (measured on pyspark 4.1: it
+    returned no operations and the tagged job ran to completion), while
+    ``cancelJobsWithTag`` matches the tag wherever the job started."""
+    sc.addJobTag(tag)
+    try:
+        return fn(*args)
+    finally:
+        sc.removeJobTag(tag)
+
+
+def _cancel(sc, tag: str, fut: Future) -> None:
+    """Stop an in-flight batch nobody will commit: cancel its tagged jobs
+    until its materialize returns (a job it starts after one cancel meets
+    the next), so no Spark work outlives the run."""
+    fut.cancel()
+    while not fut.done():
+        sc.cancelJobsWithTag(tag)
+        wait([fut], timeout=0.1)
+
+
 def _run_resumable_batches(
     spark: SparkSession,
     docs: DataFrame,
@@ -306,149 +508,24 @@ def _run_resumable_batches(
     # commits — a blocked second driver sees the winner's manifests here
     # and re-processes nothing.
     done = committed_batches(out_dir)
-    batch_ids = list(range((n_buckets + buckets_per_batch - 1) // buckets_per_batch))
-
-    processed = 0
-    for batch_id in batch_ids:
+    todo = []
+    for batch_id in range((n_buckets + buckets_per_batch - 1) // buckets_per_batch):
         lo = batch_id * buckets_per_batch
         hi = min(lo + buckets_per_batch, n_buckets)
         if batch_id in done:
-            # Config-drift guard: a committed manifest written under a
-            # DIFFERENT (n_buckets, buckets_per_batch) covers different
-            # bucket ranges — silently skipping it would drop or double
-            # documents. Resume must use the original partitioning.
-            with open(os.path.join(_commit_dir(out_dir), f"batch-{batch_id}.json")) as f:
-                manifest = json.load(f)
-            if manifest.get("buckets") != list(range(lo, hi)) or (
-                # the modulus matters even when ranges coincide: batch 0
-                # is [0,4) under both n_buckets=8 and 16, but pmod(h,8)
-                # and pmod(h,16) assign DIFFERENT documents to it. A
-                # manifest MISSING the field is a hard error too — it
-                # predates the guard, so its modulus is unverifiable and
-                # defaulting it to the current run's value would pass
-                # exactly the drift case the guard exists for (ADVICE r3).
-                manifest.get("n_buckets") != n_buckets
-            ):
-                raise ValueError(
-                    f"batch {batch_id} was committed for buckets "
-                    f"{manifest.get('buckets')} of {manifest.get('n_buckets')} "
-                    f"but this run derives {list(range(lo, hi))} of {n_buckets} "
-                    f"— resume with the original n_buckets/buckets_per_batch"
-                )
-            if manifest.get("config_fp") != config_fp:
-                # Rules/flatten drift (round-5 review): a committed batch
-                # redacted under DIFFERENT rules (or flatten toggle) must
-                # not be silently mixed with this run's output. A
-                # manifest missing the field predates the guard and is
-                # equally unverifiable — hard error, the n_buckets
-                # precedent.
-                raise ValueError(
-                    f"batch {batch_id} was committed under config "
-                    f"{manifest.get('config_fp')} but this run's rules/"
-                    f"flatten fingerprint is {config_fp} — resume with "
-                    "the original rules and flatten setting (or use a "
-                    "fresh out_dir)"
-                )
-            listing = _data_file_listing(out_dir, batch_id)
-            raw_listing = _data_file_listing(out_dir, batch_id, "raw")
-            if manifest.get("raw_files") != raw_listing:
-                raise ValueError(
-                    f"batch {batch_id}'s raw files do not match its "
-                    f"committed manifest: the raw dir (read_errors' "
-                    f"source) was modified after commit, or the manifest "
-                    f"predates the integrity guard. Re-run this out_dir "
-                    f"from scratch or restore the committed files."
-                )
-            if manifest.get("data_files") != listing:
-                # Data-integrity guard (round-7 cont. third pass): the
-                # files now present differ from what the committing run
-                # stamped — a zombie runner's late file-moves, manual
-                # tampering, or a partial restore. Mixing them in (or
-                # silently serving fewer rows) is exactly the loss the
-                # manifest exists to prevent. A manifest MISSING the
-                # field predates the guard: unverifiable, hard error
-                # (the n_buckets precedent — manifest v3).
-                n_rec = manifest.get("data_files")
-                raise ValueError(
-                    f"batch {batch_id}'s data files do not match its "
-                    f"committed manifest (recorded "
-                    f"{'<absent>' if n_rec is None else len(n_rec)} "
-                    f"files, found {len(listing)}): the batch dir was "
-                    f"modified after commit (zombie writer, tampering, "
-                    f"partial restore) or the manifest predates the "
-                    f"integrity guard. Re-run this out_dir from scratch "
-                    f"or restore the committed files."
-                )
-            continue
-        if lease_ttl_sec is not None and not storage.renew_lease(
-            lease_path, lease_owner, lease_ttl_sec
-        ):
-            # The record is gone, tombstoned, or foreign: a usurper ran
-            # (or is running) against this out_dir. Processing on would
-            # overwrite batch dirs a concurrent runner may be committing.
-            raise RuntimeError(
-                f"run lease {lease_path} was taken over before batch "
-                f"{batch_id} (owner {lease_owner}): a concurrent runner "
-                f"claimed this out_dir — this run outran lease_ttl_sec. "
-                f"Increase the ttl above the longest batch; audit the "
-                f"usurper's progress before retrying."
-            )
-        batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-        # Materialize the single-pass result ONCE; good/error views are then
-        # derived from the written files (no recompute of the Python stage).
-        full = redact_full(batch.select("doc_id", "spans"), rules, flatten)
-        full = full.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
-        raw_path = os.path.join(out_dir, "raw", f"batch={batch_id}")
-        full.write.mode("overwrite").parquet(raw_path)
-        full = spark.read.parquet(raw_path)
+            _check_committed(out_dir, batch_id, lo, hi, n_buckets, config_fp)
+        else:
+            todo.append((batch_id, lo, hi))
 
-        out = full.where(F.col("error").isNull()).select(
-            "doc_id", "spans", "n_rule_hits",
-            F.size("spans").cast("long").alias("n_spans"), "bucket",
-        )
-        errs = full.where(F.col("error").isNotNull()).select("doc_id", "error")
+    sc = spark.sparkContext
+    run_tag = f"pdfredact-run-{uuid.uuid4().hex}"
+    in_flight: list[tuple] = []  # (batch_id, lo, hi, tag, future), oldest first
+    processed = 0
 
-        data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
-        # Hive-partitioned by bucket: downstream reads of specific buckets
-        # prune partitions at planning time (asserted in test_plan_quality).
-        (
-            out.select("doc_id", "spans", "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(data_path)
-        )
-
-        # Lineage rows: one per bucket (the resume partition unit).
-        metrics = (
-            out.groupBy("bucket")
-            .agg(
-                F.min("doc_id").alias("doc_id_min"),
-                F.max("doc_id").alias("doc_id_max"),
-                F.count("*").alias("n_docs"),
-                F.sum("n_spans").alias("n_spans"),
-                F.sum("n_rule_hits").alias("n_rule_hits"),
-                F.sum(
-                    F.aggregate(
-                        "spans",
-                        F.lit(0).cast("long"),
-                        lambda acc, s: acc + F.length(s.text) + F.length(s.media_ref) + 8,
-                    )
-                ).alias("bytes_processed"),
-            )
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("partition_id", F.col("bucket"))
-        )
-        metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
-        metrics.write.mode("overwrite").parquet(metrics_path)
-
-        # Bounded error sample: the manifest keeps at most 100 rows, so never
-        # ship more than that to the driver (a high-error-rate corpus must
-        # not OOM the driver); the exact count is a separate cheap scan of
-        # the already-materialized raw parquet.
-        n_errors = errs.count()
-        err_rows = errs.limit(100).collect() if n_errors else []
+    def commit_oldest() -> None:
+        nonlocal processed
+        batch_id, lo, hi, _tag, fut = in_flight[0]
+        n_errors, errors = fut.result()
         if _hold_before_commit_sec and processed == 0:
             # drive/test hook: park ONCE before the first commit, lease
             # held, so a second real driver's blocking acquire is provable
@@ -469,15 +546,63 @@ def _run_resumable_batches(
                 "n_buckets": n_buckets,
                 "config_fp": config_fp,
                 "n_errors": n_errors,
-                "errors": [{"doc_id": r["doc_id"], "error": r["error"]} for r in err_rows],
+                "errors": errors,
                 "data_files": _data_file_listing(out_dir, batch_id),
                 "raw_files": _data_file_listing(out_dir, batch_id, "raw"),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },
         )
+        in_flight.pop(0)
         processed += 1
         if kill_after_batches is not None and processed >= kill_after_batches:
             raise KillSwitch(f"killed after {processed} batch(es)")
+
+    # Two batches in flight: batch k+1 materializes on a worker thread
+    # while the caller waits on and commits batch k, so one batch's
+    # driver-side gaps and commit overlap the next one's Spark jobs.
+    # Commits stay on this thread, strictly in batch order.
+    with ThreadPoolExecutor(max_workers=2, thread_name_prefix="run-resumable") as pool:
+        try:
+            for batch_id, lo, hi in todo:
+                if lease_ttl_sec is not None and not storage.renew_lease(
+                    lease_path, lease_owner, lease_ttl_sec
+                ):
+                    # The record is gone, tombstoned, or foreign: a usurper
+                    # ran (or is running) against this out_dir. Processing
+                    # on would overwrite batch dirs a concurrent runner may
+                    # be committing.
+                    raise RuntimeError(
+                        f"run lease {lease_path} was taken over before batch "
+                        f"{batch_id} (owner {lease_owner}): a concurrent runner "
+                        f"claimed this out_dir — this run outran lease_ttl_sec. "
+                        f"Increase the ttl above the longest batch; audit the "
+                        f"usurper's progress before retrying."
+                    )
+                tag = f"{run_tag}-batch-{batch_id}"
+                # Wrapped per submission, so each batch's thread gets its
+                # own copy of the caller's job group, description and tags:
+                # one copy shared by two threads would carry one thread's
+                # per-job settings (SQL execution id, batch tag) into the
+                # other's jobs. (With py4j's
+                # pinned threads off there is nothing per-thread to copy,
+                # and the wrapper hands back the session itself.)
+                wrap = inheritable_thread_target(spark)
+                target = _tagged if wrap is spark else wrap(_tagged)
+                fut = pool.submit(
+                    target, sc, tag, _materialize, spark, docs, out_dir,
+                    batch_id, lo, hi, rules, flatten, n_buckets, run_id,
+                )
+                in_flight.append((batch_id, lo, hi, tag, fut))
+                if len(in_flight) == 2:
+                    commit_oldest()
+            while in_flight:
+                commit_oldest()
+        except BaseException:
+            # lease loss, a failed batch, KillSwitch: the batches still in
+            # flight will never be committed — stop their writes now
+            for _b, _lo, _hi, tag, fut in in_flight:
+                _cancel(sc, tag, fut)
+            raise
 
     data_dir = os.path.join(out_dir, "data")
     for root, _dirs, files in os.walk(data_dir):
@@ -488,8 +613,6 @@ def _run_resumable_batches(
     # only _SUCCESS markers, which spark.read.parquet cannot infer a
     # schema from — return the documented empty shape instead of
     # crashing AFTER all batches committed.
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     # Schema parity with the populated path (round-5 review): partition
     # discovery over data/batch=<k>/bucket=<b>/ yields BOTH partition
     # columns, so the empty frame must carry batch too or callers that

@@ -416,15 +416,26 @@ def _pyarrow_scan_units(paths: list[str], parallelism: int) -> list[tuple]:
     return units
 
 
+def _nullable(t: pa.DataType) -> pa.DataType:
+    """``t`` with every nested field nullable."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _nullable(f.type)) for f in t])
+    if pa.types.is_list(t):
+        return pa.list_(pa.field(t.value_field.name, _nullable(t.value_type)))
+    return t
+
+
 def _make_file_doc_map(doc_map):
     """Wrap a doc-batch Arrow redactor so it consumes (path, row_group)
-    rows and decodes the parquet itself. Batches are cast to the exact
-    document Arrow schema when a file's physical schema differs (field
-    order / nullability), so the kernel sees byte-identical inputs to
-    the JVM-scan path."""
+    rows and decodes the parquet itself. Columns are taken by name; a
+    batch whose types differ from the document schema's (a file written
+    with a nullable schema, say) is cast to that schema's all-nullable
+    form, the form the JVM scan of a parquet frame feeds the stage, so
+    the kernel sees the same values on both paths."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(DOC_SCHEMA)
+    nullable = pa.schema([pa.field(f.name, _nullable(f.type)) for f in target])
 
     def read_units(rb) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -456,11 +467,13 @@ def _make_file_doc_map(doc_map):
                     use_threads=False,
                 )
             for b in it:
-                if b.schema.names == target.names and b.schema.types == target.types:
+                # by name: a file may store the columns in another order
+                b = b.select(target.names)
+                if b.schema.types == target.types:
                     yield b
                 else:
                     yield (
-                        pa.Table.from_batches([b]).cast(target).to_batches()[0]
+                        pa.Table.from_batches([b]).cast(nullable).to_batches()[0]
                     )
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -89,11 +89,15 @@ def _spread(df: DataFrame) -> DataFrame:
 #: work on the data can possibly cost — measured at sf0.1 (0.6 MB
 #: documents): spread=1 lost 0.3-0.7s per query vs spread=0, while at
 #: 10x the bytes it won 2-3x. Irrelevant at production scale (nothing
-#: is MBs); the gate protects small-SF runs. Env-overridable.
+#: is MBs); the gate protects small-SF runs. Env-overridable; a value
+#: that is not an integer falls back to the default.
 def _spread_min_bytes() -> int:
     import os
 
-    return int(os.environ.get("PDFREDACT_SPREAD_MIN_BYTES", 3_000_000))
+    try:
+        return int(os.environ.get("PDFREDACT_SPREAD_MIN_BYTES", 3_000_000))
+    except ValueError:
+        return 3_000_000
 
 
 def _needs_spread(spark: SparkSession, path: str) -> bool:

@@ -289,6 +289,7 @@ def test_pyarrow_direct_scan_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from pdfredact_spark.fixtures import SSN_RULE, corpus, demo_doc
+    from pdfredact_spark.model import DOC_SCHEMA
     from pdfredact_spark.pipeline import (
         _parquet_scan_files,
         docs_to_df,
@@ -300,10 +301,17 @@ def test_pyarrow_direct_scan_parity(spark, tmp_path):
     mem_df = docs_to_df(spark, docs)
     p = str(tmp_path / "corpus")
     mem_df.repartition(5).write.parquet(p)
+    # a sixth file from another writer: nullable schema, NULL spans
+    null_df = spark.createDataFrame(
+        [("null-spans", None)],
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    null_df.coalesce(1).write.mode("append").parquet(p)
     scan_df = spark.read.parquet(p)
 
     files = _parquet_scan_files(scan_df)
-    assert files and len(files) == 5, files
+    assert files and len(files) == 6, files
     # non-bare plans and disabled env must fall back
     assert _parquet_scan_files(scan_df.where(F.col("doc_id") > "a")) is None
     os.environ["PDFREDACT_PYREAD"] = "0"
@@ -321,10 +329,29 @@ def test_pyarrow_direct_scan_parity(spark, tmp_path):
     out = redact_full(scan_df, [SSN_RULE])
     # one (path, row_group) unit per task — a round-robin repartition
     # here clumped 4-6 files onto some tasks (5.7x soak straggler)
-    assert out.rdd.getNumPartitions() == 5
+    assert out.rdd.getNumPartitions() == 6
 
     got = key(out.collect())
-    want = key(redact_full(mem_df, [SSN_RULE]).collect())
+    want = key(redact_full(mem_df.unionByName(null_df), [SSN_RULE]).collect())
     assert got == want
     # the rotated doc really exercised the error routing on the new path
     assert got["rot-err"][2] is not None and "rotation" in got["rot-err"][2].lower()
+    # the JVM scan and the pyarrow scan turn the NULL-spans row into the
+    # same error row
+    os.environ["PDFREDACT_PYREAD"] = "0"
+    try:
+        jvm = key(redact_full(scan_df, [SSN_RULE]).collect())
+    finally:
+        os.environ.pop("PDFREDACT_PYREAD", None)
+    assert got["null-spans"] == jvm["null-spans"]
+    assert got["null-spans"] == (None, 0, "ValueError: spans column is null")
+
+    # a file storing the columns in the other order: the pyarrow scan
+    # takes them by name
+    rev = str(tmp_path / "reversed")
+    mem_df.select("spans", "doc_id").coalesce(1).write.parquet(rev)
+    rev_df = spark.read.schema(DOC_SCHEMA).parquet(rev)
+    assert _parquet_scan_files(rev_df)
+    assert key(redact_full(rev_df, [SSN_RULE]).collect()) == key(
+        redact_full(mem_df, [SSN_RULE]).collect()
+    )

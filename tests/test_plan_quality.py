@@ -289,3 +289,18 @@ def test_ngram_jaccard_stays_equi_join(spark):
     plan = plan_of(SQL_QUERIES["dedup_ngram_jaccard"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_spread_min_bytes_bad_env_falls_back(monkeypatch):
+    """The scan-spread size gate's env knob degrades gracefully: a value
+    that is not an integer falls back to the default instead of raising
+    mid-query."""
+    from pdfredact_spark.queries import _spread_min_bytes
+
+    monkeypatch.delenv("PDFREDACT_SPREAD_MIN_BYTES", raising=False)
+    assert _spread_min_bytes() == 3_000_000
+    monkeypatch.setenv("PDFREDACT_SPREAD_MIN_BYTES", "1234")
+    assert _spread_min_bytes() == 1234
+    for bad in ("3MB", "", "1e6"):
+        monkeypatch.setenv("PDFREDACT_SPREAD_MIN_BYTES", bad)
+        assert _spread_min_bytes() == 3_000_000

@@ -273,3 +273,66 @@ def test_resume_rejects_modified_committed_data(spark, tmp_path):
         json.dump(manifest, fh)
     with pytest.raises(ValueError, match="do not match its committed manifest"):
         run_resumable(spark, docs, out, [SSN_RULE], **args)
+
+
+def test_pipelined_batches_keep_caller_job_group(spark, tmp_path):
+    """Batches materialize on worker threads; every Spark job they start
+    must still carry the caller's job group, or user job groups (and
+    per-group attribution and cancelJobGroup) silently miss them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("resume-caller-group", "resume-caller-group")
+    try:
+        run_resumable(spark, docs_to_df(spark, corpus(24)), str(tmp_path / "o"),
+                      [SSN_RULE], n_buckets=8, buckets_per_batch=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    # 4 batches x (raw write, data write, metrics write, error sample)
+    assert len(tracker.getJobIdsForGroup("resume-caller-group")) >= 16
+
+
+def _outputs(spark, out_dir, df):
+    from pdfredact_spark.checkpoint import read_errors
+
+    rows = sorted((r["doc_id"], r["spans"], r["bucket"], r["batch"]) for r in df.collect())
+    metrics = sorted(tuple(r) for r in read_metrics(spark, out_dir).collect())
+    errors = sorted(tuple(r) for r in read_errors(spark, out_dir).collect())
+    return rows, metrics, errors
+
+
+def test_pipelined_failure_cancels_in_flight_batch(spark, tmp_path, monkeypatch):
+    """A batch whose materialize fails while the batch before it commits:
+    the error reaches the caller, exactly the earlier batch is committed,
+    the batch submitted after it is cancelled rather than left writing,
+    and a rerun completes to the uninterrupted run's output."""
+    import pdfredact_spark.checkpoint as checkpoint
+    from pdfredact_spark.fixtures import demo_doc
+
+    real = checkpoint._materialize
+
+    def flaky(spark_, docs, out_dir, batch_id, *rest):
+        if batch_id == 1:
+            raise RuntimeError("batch 1 materialize failed")
+        return real(spark_, docs, out_dir, batch_id, *rest)
+
+    docs = docs_to_df(spark, corpus(40) + [demo_doc("rot-p", rotation_page1=90)])
+    args = dict(run_id="r", n_buckets=8, buckets_per_batch=2)
+    out = str(tmp_path / "o")
+    monkeypatch.setattr(checkpoint, "_materialize", flaky)
+    with pytest.raises(RuntimeError, match="batch 1 materialize failed"):
+        # the hold parks batch 0's commit while batch 1 fails
+        run_resumable(spark, docs, out, [SSN_RULE], _hold_before_commit_sec=1.0, **args)
+    monkeypatch.undo()
+    assert committed_batches(out) == {0}
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    # batch 2 was in flight when batch 1 failed: cancelled at its first
+    # jobs, it never reached its metrics write
+    assert not os.path.exists(os.path.join(out, "metrics", "batch=2"))
+
+    resumed = run_resumable(spark, docs, out, [SSN_RULE], **args)
+    ref_dir = str(tmp_path / "ref")
+    ref = run_resumable(spark, docs, ref_dir, [SSN_RULE], **args)
+    assert _outputs(spark, out, resumed) == _outputs(spark, ref_dir, ref)
