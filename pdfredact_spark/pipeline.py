@@ -12,11 +12,14 @@ emits finished offset-sorted span sequences per doc), no per-group Python
 call overhead (one call per Arrow batch of docs), and no pandas block
 conversion on either edge — the kernel consumes the Arrow child arrays as
 flat parallel lists (kinds/texts/refs/offsets) and its output lists become
-Arrow child arrays directly. Parallelism comes from input splits — keep
-the table written with enough files/row-groups (corpus generation uses 128
-partitions). A mega document runs inside one task (pages loop in the
-kernel); the int32 offset encoding bounds a doc at ~100k spans, bounding
-the straggler.
+Arrow child arrays directly. Every input (a parquet table, a filtered or
+an in-memory frame) reaches the stage the same way: Spark's own scan
+feeds ``mapInArrow``. Its parquet reader matches columns and nested span
+fields by name, so the kernel sees one batch shape whatever the file
+layout. Parallelism comes from input splits — keep the table written
+with enough files/row-groups (corpus generation uses 128 partitions). A
+mega document runs inside one task (pages loop in the kernel); the int32
+offset encoding bounds a doc at ~100k spans, bounding the straggler.
 
 MEGA-SPLIT option (``mega_split=True``) for corpora with pathological
 giants: oversized docs explode to flat spans and fan out per PAGE (offset
@@ -336,167 +339,6 @@ def _make_page_apply(rules: list[Rule], flatten: bool):
     return fn
 
 
-#: rows per pyarrow-read batch on the direct-scan path — matches the
-#: session default for spark.sql.execution.arrow.maxRecordsPerBatch so
-#: the kernel sees the same batch shape either way
-_PYREAD_BATCH_ROWS = 2048
-
-
-def _parquet_scan_files(df: DataFrame) -> list[str] | None:
-    """The document files behind ``df`` — iff it is a BARE, unpartitioned,
-    local-filesystem parquet scan whose schema is exactly the document
-    model (the shape `spark.read.parquet(corpus)` hands the bench and
-    soak jobs). Anything else (filters, projections, in-memory frames,
-    partition columns, remote filesystems) returns None and the caller
-    keeps the ordinary JVM scan.
-
-    Why: Spark feeds a Python stage by converting scan output
-    row-by-row into Arrow (and the stage's Arrow output back into rows).
-    Measured at the bench redaction leg, that INPUT conversion burns as
-    much CPU as the redaction kernel itself. When the input is plain
-    parquet on a filesystem every executor can read, the Python workers
-    can decode it natively (pyarrow) from a distributed file/row-group
-    list, eliminating the entire input-side conversion. The rows
-    produced are identical — this changes HOW bytes reach the kernel,
-    never what is computed. PDFREDACT_PYREAD=0 disables."""
-    import os
-
-    if os.environ.get("PDFREDACT_PYREAD", "1") == "0":
-        return None
-    try:
-        # simpleString ignores nullability — a read-back parquet schema
-        # is all-nullable while DOC_SCHEMA declares required fields; the
-        # VALUES are what must agree, and null spans/offsets route
-        # through the kernel's error paths identically on both scans
-        if df.schema.simpleString() != DOC_SCHEMA.simpleString():
-            return None
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        rel = plan.relation()
-        if rel.getClass().getSimpleName() != "HadoopFsRelation":
-            return None
-        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
-            return None
-        if rel.partitionSchema().length() != 0:
-            return None
-        paths: list[str] = []
-        for f in df.inputFiles():
-            if f.startswith("file:"):
-                from urllib.parse import unquote, urlparse
-
-                paths.append(unquote(urlparse(f).path))
-            elif f.startswith("/"):
-                paths.append(f)
-            else:
-                return None  # remote FS: the JVM scan knows how to read it
-        return sorted(paths) or None
-    except Exception:
-        return None
-
-
-def _pyarrow_scan_units(paths: list[str], parallelism: int) -> list[tuple]:
-    """(path, row_group) work units: file-grain by default (corpus
-    layouts size files to ~1 task each); when files are too FEW to feed
-    the cluster, split at row-group grain (footer metadata reads,
-    bounded to small file counts) — pyarrow reads row groups
-    independently, so a single huge file no longer caps parallelism."""
-    units: list[tuple] = [(p, None) for p in paths]
-    if len(paths) < 2 * parallelism and len(paths) <= 256:
-        try:
-            import pyarrow.parquet as pq
-
-            rg_units: list[tuple] = []
-            for p in paths:
-                n = pq.ParquetFile(p).metadata.num_row_groups
-                rg_units.extend((p, g) for g in range(max(n, 1)))
-            units = rg_units
-        except Exception:
-            units = [(p, None) for p in paths]
-    return units
-
-
-def _nullable(t: pa.DataType) -> pa.DataType:
-    """``t`` with every nested field nullable."""
-    if pa.types.is_struct(t):
-        return pa.struct([pa.field(f.name, _nullable(f.type)) for f in t])
-    if pa.types.is_list(t):
-        return pa.list_(pa.field(t.value_field.name, _nullable(t.value_type)))
-    return t
-
-
-def _make_file_doc_map(doc_map):
-    """Wrap a doc-batch Arrow redactor so it consumes (path, row_group)
-    rows and decodes the parquet itself. Columns are taken by name; a
-    batch whose types differ from the document schema's (a file written
-    with a nullable schema, say) is cast to that schema's all-nullable
-    form, the form the JVM scan of a parquet frame feeds the stage, so
-    the kernel sees the same values on both paths."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(DOC_SCHEMA)
-    nullable = pa.schema([pa.field(f.name, _nullable(f.type)) for f in target])
-
-    def read_units(rb) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        paths = rb.column(0).to_pylist()
-        groups = rb.column(1).to_pylist()
-        for path, g in zip(paths, groups):
-            pf = pq.ParquetFile(path)
-            # use_threads=False: the default spins arrow's GLOBAL cpu
-            # pool (os.cpu_count() threads) in EVERY python worker —
-            # at local[32] that is 32x32 decode threads whose
-            # oversubscription bursts showed up as a 5.7x task-time
-            # tail in the 5M-doc soak (median 3.7s, max 20.8s; with
-            # single-threaded decode the JVM-scan tail is 2.4x). One
-            # Spark task = one core's budget; decode inside it serially.
-            if g is None:
-                it = pf.iter_batches(
-                    batch_size=_PYREAD_BATCH_ROWS,
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-            else:
-                if g >= pf.metadata.num_row_groups:
-                    continue  # guard unit built from a stale footer read
-                it = pf.iter_batches(
-                    batch_size=_PYREAD_BATCH_ROWS,
-                    row_groups=[g],
-                    columns=["doc_id", "spans"],
-                    use_threads=False,
-                )
-            for b in it:
-                # by name: a file may store the columns in another order
-                b = b.select(target.names)
-                if b.schema.types == target.types:
-                    yield b
-                else:
-                    yield (
-                        pa.Table.from_batches([b]).cast(nullable).to_batches()[0]
-                    )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            yield from doc_map(read_units(rb))
-
-    return fn
-
-
-def _redact_files_df(spark: SparkSession, paths: list[str], doc_map) -> DataFrame:
-    units = _pyarrow_scan_units(paths, spark.sparkContext.defaultParallelism)
-    # EXACTLY one unit per partition via parallelize's contiguous
-    # slicing — a repartition(n) here round-robins each input partition
-    # from its own random phase, which clumps 4-6 files onto some tasks
-    # and zero onto others (measured: a 5.7x task-duration tail in the
-    # 5M-doc soak, median 3.5s / max 20.9s; even slicing restores the
-    # JVM scan's flat profile). No exchange at all: the file list is
-    # parallelized directly, document bytes never move.
-    rdd = spark.sparkContext.parallelize(units, len(units))
-    src = spark.createDataFrame(rdd, "path string, row_group int")
-    return src.mapInArrow(_make_file_doc_map(doc_map), schema=REDACTED_SCHEMA)
-
-
 def _span_order(a, b):
     """Deterministic reassembly order: offset asc then kind/media_ref/text —
     ties between coincident spans resolve identically on every run/retry."""
@@ -525,7 +367,11 @@ def redact_full(
     Returns (doc_id, spans, n_rule_hits, error): error is null for clean
     docs; errored docs (rotation fail-fast) carry spans=null. Empty rule
     set without flatten -> identity with zero hits (PdfPigTextLocator.cs:
-    37-41 / ApplyCommand.cs:65-69 pass-through)."""
+    37-41 / ApplyCommand.cs:65-69 pass-through).
+
+    Whatever ``df`` is (a parquet scan, a filtered or an in-memory
+    frame), Spark's own scan feeds its rows to the Arrow stages, so the
+    input's shape never changes the output rows."""
     if not rules and not flatten:
         # identity pass-through — but NULL-spans garbage rows still route
         # to the error column (round-5 review: every other path routes
@@ -544,10 +390,6 @@ def redact_full(
     if not mega_split:
         if num_partitions:
             df = df.repartition(num_partitions)
-            return df.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
-        files = _parquet_scan_files(df)
-        if files:
-            return _redact_files_df(df.sparkSession, files, doc_map)
         return df.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
 
     # NULL-spans rows must take the doc-grain branch, where the Arrow

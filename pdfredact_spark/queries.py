@@ -31,8 +31,10 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 #: group table — the driver-generated testdata layout — pins every scan
 #: and all pre-exchange map work to ONE task no matter how small
 #: maxPartitionBytes goes (guide §2.5 "input skew: one huge unsplittable
-#: file ... repartition immediately after the read").
-_SCAN_UNITS_CACHE: dict[str, tuple[int, int]] = {}
+#: file ... repartition immediately after the read"). Keyed by (path,
+#: parallelism, path mtime): the probe short-circuits at `parallelism`
+#: files, and a table rewritten at the same path must be probed again.
+_SCAN_UNITS_CACHE: dict[tuple[str, int, int | None], tuple[int, int]] = {}
 
 
 def _scan_units(path: str, enough: int) -> tuple[int, int]:
@@ -105,11 +107,18 @@ def _needs_spread(spark: SparkSession, path: str) -> bool:
     splittable units than defaultParallelism) AND is big enough that the
     per-row work plausibly dwarfs one exchange of it. Metadata-only,
     cached."""
+    import os
+
     par = spark.sparkContext.defaultParallelism
-    probe = _SCAN_UNITS_CACHE.get(path)
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
+        mtime = None
+    key = (path, par, mtime)
+    probe = _SCAN_UNITS_CACHE.get(key)
     if probe is None:
         probe = _scan_units(path, enough=par)
-        _SCAN_UNITS_CACHE[path] = probe
+        _SCAN_UNITS_CACHE[key] = probe
     units, nbytes = probe
     return units < par and nbytes >= _spread_min_bytes()
 
@@ -962,30 +971,8 @@ def _ann_lsh_topk_impl(spark, sf_dir, probe_masks):
     emb = _t(spark, sf_dir, "embeddings", spread=True)
     planes = 4  # 16 buckets — sized so a bucket holds ~1/16 of the corpus
 
-    def bucket_col():
-        # bit p = sign of sum_d emb[d] * w(p,d), w = ±1 from md5(p|d)
-        # parity — precomputed driver-side (_SIGN_PLANE) so the plan
-        # doesn't re-hash md5 planes x dim times per row; byte-identical
-        # to the oracle's in-SQL md5 parity.
-        bits = []
-        for p in range(planes):
-            w = _SIGN_PLANE(str(p))
-            proj = F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    F.slice(F.array(*[F.lit(x) for x in w]), 1, F.size("embedding")),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out.cast("int")
-
-    bucketed = emb.select("vec_id", "embedding", bucket_col().alias("bucket"))
+    bucket = _sign_bits(F.col("embedding"), [str(p) for p in range(planes)])
+    bucketed = emb.select("vec_id", "embedding", bucket.alias("bucket"))
     qrow = bucketed.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb"), F.col("bucket").alias("q_bucket")
     )
@@ -1027,6 +1014,22 @@ def _SIGN_PLANE(tag: str, max_dim: int = 256) -> list[float]:
     ]
 
 
+def _sign_bits(col, tags: list[str]):
+    """Sign-random-projection code of the vector in ``col``: bit i is set
+    when its dot with the ``_SIGN_PLANE(tags[i])`` hyperplane is > 0.
+    The weights are precomputed driver-side and embedded as a literal
+    array, so the plan never re-hashes md5 planes x dim times per row;
+    they equal the oracle's in-SQL md5 parity. Each projection is
+    ``_ivf_dot``'s left-to-right fold."""
+    out = None
+    for i, tag in enumerate(tags):
+        w = F.array(*[F.lit(x) for x in _SIGN_PLANE(tag)])
+        proj = _ivf_dot(col, F.slice(w, 1, F.size(col)))
+        bit = F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        out = bit if out is None else out + bit
+    return out.cast("int")
+
+
 def q_ann_batch_topk(spark, sf_dir):
     """Batch ANN: top-5 neighbors for EACH of 8 query vectors in ONE job —
     the shape a real retrieval/dedup pipeline runs (per-query jobs don't
@@ -1036,26 +1039,8 @@ def q_ann_batch_topk(spark, sf_dir):
     re-rank per query. Deterministic ties on vec_id."""
     emb = _t(spark, sf_dir, "embeddings", spread=True)
 
-    def bucket(col):
-        bits = []
-        for p in range(4):
-            w = _SIGN_PLANE(str(p))
-            proj = F.aggregate(
-                F.zip_with(
-                    col,
-                    F.slice(F.array(*[F.lit(x) for x in w]), 1, F.size(col)),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out.cast("int")
-
-    base = emb.select("vec_id", "embedding", bucket(F.col("embedding")).alias("bucket"))
+    bucket = _sign_bits(F.col("embedding"), [str(p) for p in range(4)])
+    base = emb.select("vec_id", "embedding", bucket.alias("bucket"))
     qs = base.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
@@ -1124,11 +1109,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     )
     # Pre-normalize ONCE so the refine stage evaluates a single dot product
     # per candidate pair instead of two norms + a dot.
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
+    norm = _ivf_norm(F.col("embedding"))
     un = emb.unionByName(dup)
     if _needs_spread(spark, f"{sf_dir}/embeddings.parquet"):
         # the normalize + 16-plane interpreted folds below are the cost;
@@ -1139,40 +1120,22 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     )
 
     n_planes, band_size = 16, 8
-    bits = []
-    for p in range(n_planes):
-        # Hyperplane weights are md5-parity constants per (plane, dim):
-        # precompute them driver-side and embed as a literal array (the
-        # in-plan md5 variant re-hashed 16 x dim times PER ROW). Same
-        # values — hashlib.md5 == Spark md5.
-        w = _SIGN_PLANE(f"e{p}")
-        proj = F.aggregate(
-            F.zip_with(
-                "unit",
-                F.slice(F.array(*[F.lit(x) for x in w]), 1, F.size("unit")),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    bands = [
+        F.struct(
+            F.lit(b0 // band_size).alias("band"),
+            _sign_bits(
+                F.col("unit"), [f"e{p}" for p in range(b0, b0 + band_size)]
+            ).alias("sig"),
         )
-        bits.append(F.when(proj > 0, F.lit(1 << (p % band_size))).otherwise(F.lit(0)))
-    bands = []
-    for b0 in range(0, n_planes, band_size):
-        sig = bits[b0]
-        for b in bits[b0 + 1 : b0 + band_size]:
-            sig = sig + b
-        bands.append(F.struct(F.lit(b0 // band_size).alias("band"), sig.cast("int").alias("sig")))
+        for b0 in range(0, n_planes, band_size)
+    ]
 
     banded = un.select(
         "vec_id", "unit", F.explode(F.array(*bands)).alias("bs")
     ).select("vec_id", "unit", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
     a, b = banded.alias("a"), banded.alias("b")
-    cos = F.aggregate(
-        F.zip_with(F.col("a.unit"), F.col("b.unit"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cos = _ivf_dot(F.col("a.unit"), F.col("b.unit"))
     return (
         a.join(
             b,

@@ -278,47 +278,57 @@ def test_large_random_differential_vs_kernel(spark):
         assert got[d["doc_id"]] == [(s["kind"], s["text"], s["media_ref"]) for s in exp], d["doc_id"]
 
 
-def test_pyarrow_direct_scan_parity(spark, tmp_path):
-    """The direct pyarrow read path (round 8): a bare parquet scan of the
-    document schema is decoded inside the Python stage from a distributed
-    (path, row_group) list — results must be IDENTICAL to the JVM-scan
-    path, detection must refuse anything but a bare scan, and
-    PDFREDACT_PYREAD=0 must disable it."""
-    import os
+def test_input_shape_does_not_change_output(spark, tmp_path):
+    """One parquet directory mixing every file layout a document table
+    can arrive in must redact exactly like the same documents held in
+    memory: the JVM scan matches columns and nested span fields by name,
+    so the Arrow stage sees one batch shape whatever the writer did.
 
-    from pyspark.sql import functions as F
+    Files: five DOC_SCHEMA files (mega docs and a rotation-error doc), a
+    nullable-schema file holding a NULL-spans row, a file storing its
+    top-level columns reversed, and a pyarrow-written file whose span
+    struct stores its fields as (text, kind, media_ref, offset)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from pdfredact_spark.fixtures import SSN_RULE, corpus, demo_doc
     from pdfredact_spark.model import DOC_SCHEMA
-    from pdfredact_spark.pipeline import (
-        _parquet_scan_files,
-        docs_to_df,
-        redact_full,
-    )
+    from pdfredact_spark.pipeline import redact_full
 
-    docs = corpus(60, mega_every=25)
-    docs.append(demo_doc("rot-err", rotation_page1=90))
-    mem_df = docs_to_df(spark, docs)
+    def renamed(prefix, ds):
+        return [{"doc_id": f"{prefix}{d['doc_id']}", "spans": d["spans"]} for d in ds]
+
+    main = corpus(60, mega_every=25) + [demo_doc("rot-err", rotation_page1=90)]
+    rev = renamed("rev-", corpus(8))
+    nested = renamed("nest-", corpus(8)) + [demo_doc("nest-rot", rotation_page1=90)]
     p = str(tmp_path / "corpus")
-    mem_df.repartition(5).write.parquet(p)
-    # a sixth file from another writer: nullable schema, NULL spans
+
+    docs_to_df(spark, main).repartition(5).write.parquet(p)
     null_df = spark.createDataFrame(
         [("null-spans", None)],
         "doc_id string, "
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     null_df.coalesce(1).write.mode("append").parquet(p)
-    scan_df = spark.read.parquet(p)
-
-    files = _parquet_scan_files(scan_df)
-    assert files and len(files) == 6, files
-    # non-bare plans and disabled env must fall back
-    assert _parquet_scan_files(scan_df.where(F.col("doc_id") > "a")) is None
-    os.environ["PDFREDACT_PYREAD"] = "0"
-    try:
-        assert _parquet_scan_files(scan_df) is None
-    finally:
-        os.environ.pop("PDFREDACT_PYREAD", None)
+    docs_to_df(spark, rev).select("spans", "doc_id").coalesce(1).write.mode(
+        "append"
+    ).parquet(p)
+    span_t = pa.struct([
+        ("text", pa.string()), ("kind", pa.string()),
+        ("media_ref", pa.string()), ("offset", pa.int32()),
+    ])
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": [d["doc_id"] for d in nested],
+                "spans": pa.array(
+                    [d["spans"] for d in nested], type=pa.list_(span_t)
+                ),
+            }
+        ),
+        f"{p}/part-nested-order.parquet",
+    )
+    scan_df = spark.read.schema(DOC_SCHEMA).parquet(p)
+    assert len(scan_df.inputFiles()) == 8
 
     def key(rows):
         return {
@@ -326,32 +336,14 @@ def test_pyarrow_direct_scan_parity(spark, tmp_path):
             for r in rows
         }
 
-    out = redact_full(scan_df, [SSN_RULE])
-    # one (path, row_group) unit per task — a round-robin repartition
-    # here clumped 4-6 files onto some tasks (5.7x soak straggler)
-    assert out.rdd.getNumPartitions() == 6
-
-    got = key(out.collect())
-    want = key(redact_full(mem_df.unionByName(null_df), [SSN_RULE]).collect())
+    mem_df = docs_to_df(spark, main + rev + nested).unionByName(null_df)
+    got_rows = redact_full(scan_df, [SSN_RULE]).collect()
+    got = key(got_rows)
+    want = key(redact_full(mem_df, [SSN_RULE]).collect())
+    assert len(got_rows) == len(want) == len(main) + len(rev) + len(nested) + 1
     assert got == want
-    # the rotated doc really exercised the error routing on the new path
-    assert got["rot-err"][2] is not None and "rotation" in got["rot-err"][2].lower()
-    # the JVM scan and the pyarrow scan turn the NULL-spans row into the
-    # same error row
-    os.environ["PDFREDACT_PYREAD"] = "0"
-    try:
-        jvm = key(redact_full(scan_df, [SSN_RULE]).collect())
-    finally:
-        os.environ.pop("PDFREDACT_PYREAD", None)
-    assert got["null-spans"] == jvm["null-spans"]
+    for d in ("rev-d000000003", "nest-d000000003"):
+        assert got[d][1] > 0 and got[d][2] is None, d
+    for d in ("rot-err", "nest-rot"):
+        assert got[d][2] is not None and "rotation" in got[d][2].lower(), d
     assert got["null-spans"] == (None, 0, "ValueError: spans column is null")
-
-    # a file storing the columns in the other order: the pyarrow scan
-    # takes them by name
-    rev = str(tmp_path / "reversed")
-    mem_df.select("spans", "doc_id").coalesce(1).write.parquet(rev)
-    rev_df = spark.read.schema(DOC_SCHEMA).parquet(rev)
-    assert _parquet_scan_files(rev_df)
-    assert key(redact_full(rev_df, [SSN_RULE]).collect()) == key(
-        redact_full(mem_df, [SSN_RULE]).collect()
-    )
