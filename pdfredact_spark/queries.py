@@ -1242,9 +1242,9 @@ def _connected_components(edges, _rounds: list | None = None,
     neighbors (large-star) then its smaller ones (small-star) toward the
     local minimum, contracting the graph into per-component stars in
     O(log^2 n) rounds INDEPENDENT OF DIAMETER. This replaces round-3's
-    min-label propagation (kept below as
-    _connected_components_propagation for the cross-check test), whose
-    O(diameter) rounds die on chain-shaped dup graphs — template spam at
+    min-label propagation (tests cross-check against a union-find
+    oracle in tests/test_rank_select.py), whose O(diameter) rounds die
+    on chain-shaped dup graphs — template spam at
     10^12 docs produces exactly those; a 200-node path costs propagation
     ~199 rounds but the star form 9 (pytest-pinned at <= 12).
 
@@ -1493,8 +1493,8 @@ def _connected_components(edges, _rounds: list | None = None,
         F.col("src").alias("node"), F.col("dst").alias("label")
     ).unionByName(roots.select("node", F.col("node").alias("label")))
     # a node appearing ONLY in self-loop edges is a singleton component:
-    # the src != dst normalization above erased it, but the propagation
-    # twin (and the "every input node gets a label" contract) keeps it
+    # the src != dst normalization above erased it, but the "every input
+    # node gets a label" contract keeps it
     loops = (
         edges.where(F.col("src") == F.col("dst"))
         .select(F.col("src").alias("node"))
@@ -1504,73 +1504,6 @@ def _connected_components(edges, _rounds: list | None = None,
         "node", F.col("node").alias("label")
     )
     return labels.unionByName(singletons)
-
-
-def _connected_components_propagation(edges, work_dir: str | None = None,
-                                      storage=None):
-    """Round-3 bulk-synchronous min-label propagation, O(diameter)
-    rounds — retained as the cross-check twin for the star algorithm
-    (tests assert identical labels on random graphs). Rounds are
-    parquet-materialized like the star form (recompute-safe; see
-    _materialize_round)."""
-    import atexit
-    import tempfile
-
-    from pdfredact_spark.catalog import LOCAL_LEDGER_STORAGE
-
-    _fs = storage if storage is not None else LOCAL_LEDGER_STORAGE
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="pdfredact-ccp-")
-        atexit.register(_fs.delete_tree, work_dir)
-    # Materialize the adjacency ONCE: it sits on the build side of every
-    # round's join, and an unmaterialized adj would re-execute the whole
-    # pair-finding job each iteration.
-    adj = _materialize_round(
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        work_dir,
-        "adj",
-        storage=_fs,
-    )
-    labels = _materialize_round(
-        adj.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("label")
-        ),
-        work_dir,
-        "l_0",
-        storage=_fs,
-    )
-
-    rnd = 0
-    while True:
-        nbr_min = (
-            adj.join(
-                labels.select(F.col("node").alias("dst"), F.col("label").alias("dl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dl").alias("nbr_min"))
-        )
-        rnd += 1
-        new_labels = _materialize_round(
-            labels.join(nbr_min, labels.node == nbr_min.src, "left").select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("new_label"),
-                "label",
-            ),
-            work_dir,
-            f"l_{rnd}",
-            # l_0 is as deletable as any later round once l_1 is
-            # readable (round-5 review: the rnd > 1 guard leaked it)
-            prev=f"l_{rnd - 1}",
-            storage=_fs,
-        )
-        changed = new_labels.where(F.col("new_label") != F.col("label")).count()
-        labels = new_labels.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    return labels
 
 
 def q_dedup_clusters(spark, sf_dir, max_doc_id: int = 100):

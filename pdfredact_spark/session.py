@@ -10,6 +10,10 @@ jobs share one tuned profile:
 - shuffle partitions sized to the parallelism level (>= 2x cores) rather
   than the 200 default, so local runs don't pay 200-task scheduling
   overhead while cluster runs can override via conf.
+- Python workers import the installed pyspark (``worker_daemon``, set by
+  ``_daemon_conf`` on local masters): with ``pyspark.zip`` on their path
+  each task's ``importlib.invalidate_caches()`` re-reads the Spark
+  archives (~0.2 s a task) and each daemon compiles pyspark from the zip.
 """
 
 from __future__ import annotations
@@ -17,6 +21,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _daemon_conf(master: str | None, package_root: str) -> dict:
+    """The worker daemon module when workers, which start in this driver's
+    cwd with its PYTHONPATH, can import this package from package_root."""
+    if master != "local" and not (master or "").startswith("local["):
+        return {}
+    search = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    root = os.path.realpath(package_root)
+    if os.path.isdir(root) and root in {os.path.realpath(p) for p in search if p}:
+        return {"spark.python.daemon.module": "pdfredact_spark.worker_daemon"}
+    return {}
 
 
 def get_spark(
@@ -53,6 +69,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra or {}).items():
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for k, v in {**_daemon_conf(master, package_root), **(extra or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -9,6 +9,24 @@ from pyspark.sql import functions as F
 from pdfredact_spark.queries import _connected_components, _rank_select
 
 
+def _cc_oracle(edges):
+    """Union-find over (src, dst) pairs: {(node, label)} with label = the
+    minimum node id in the node's component (self-loops included)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
 def _median_ground_truth(values):
     s = sorted(values)
     return s[len(s) // 2]  # A5 upper median: sorted[n//2], 0-based
@@ -123,22 +141,16 @@ def test_star_cc_empty_edges(spark):
 def test_star_cc_keeps_self_loop_singletons(spark):
     """A node appearing only in a self-loop edge is a singleton
     component: the src != dst normalization must not erase it (round-4
-    review #4 — the propagation twin labels it, so the star form must
+    review #4 — the union-find oracle labels it, so the star form must
     too), and a self-loop on a connected node must not duplicate it."""
-    from pdfredact_spark.queries import (
-        _connected_components,
-        _connected_components_propagation,
-    )
+    from pdfredact_spark.queries import _connected_components
 
-    df = spark.createDataFrame([(3, 3), (1, 2), (2, 2)], "src long, dst long")
+    edges = [(3, 3), (1, 2), (2, 2)]
+    df = spark.createDataFrame(edges, "src long, dst long")
     star = sorted(
         (r["node"], r["label"]) for r in _connected_components(df).collect()
     )
-    prop = sorted(
-        (r["node"], r["label"])
-        for r in _connected_components_propagation(df).collect()
-    )
-    assert star == prop == [(1, 1), (2, 1), (3, 3)]
+    assert star == sorted(_cc_oracle(edges)) == [(1, 1), (2, 1), (3, 3)]
 
 
 def test_rank_select_ignores_null_values(spark):
@@ -237,6 +249,10 @@ def test_star_cc_reuse_or_clean_and_kill_resume(spark, tmp_path, monkeypatch):
     from pdfredact_spark.checkpoint import KillSwitch
     from pdfredact_spark.queries import _cc_work_dir, _connected_components
 
+    # the killed run leaves the work-dir lease held; a ttl above one CC
+    # round on a slow host lets the rerun take it over in seconds, not
+    # after the default 600 s
+    monkeypatch.setenv("PDFREDACT_CC_LEASE_TTL", "10.0")
     wd = str(tmp_path / "cc")
     n = 200
     edges = spark.createDataFrame(
@@ -298,16 +314,12 @@ def test_graded_cc_query_honors_cc_workdir(spark, tmp_path, monkeypatch):
 
 
 def test_star_cc_matches_propagation_on_random_graph(spark):
-    """Cross-check: the star algorithm and round-3's min-label
-    propagation must produce identical (node, label) sets on a seeded
-    random graph with mixed component shapes (chains, triangles,
-    isolated pairs, a hub)."""
+    """Cross-check: the star algorithm and a union-find oracle must
+    produce identical (node, label) sets on a seeded random graph with
+    mixed component shapes (chains, triangles, isolated pairs, a hub)."""
     import random
 
-    from pdfredact_spark.queries import (
-        _connected_components,
-        _connected_components_propagation,
-    )
+    from pdfredact_spark.queries import _connected_components
 
     rng = random.Random(11)
     edges = []
@@ -327,8 +339,4 @@ def test_star_cc_matches_propagation_on_random_graph(spark):
             edges.append((a, b))
     df = spark.createDataFrame(edges, "src long, dst long")
     star = {(r["node"], r["label"]) for r in _connected_components(df).collect()}
-    prop = {
-        (r["node"], r["label"])
-        for r in _connected_components_propagation(df).collect()
-    }
-    assert star == prop
+    assert star == _cc_oracle(edges)
