@@ -5,18 +5,18 @@ input in deterministic PARTITION BUCKETS and commits a manifest per batch:
 
 - every document is assigned ``bucket = pmod(xxhash64(doc_id), n_buckets)``
   — deterministic under retries and across runs;
-- the job loops over bucket batches; each batch writes its output under
-  ``<out>/data/batch=<k>/`` (overwrite-idempotent: a re-run of an
-  uncommitted batch simply rewrites it) and lineage rows under
-  ``<out>/metrics/batch=<k>/``;
+- the job loops over bucket batches; each batch writes every row, clean
+  and quarantined, once under ``<out>/data/batch=<k>/`` (overwrite-
+  idempotent: a re-run of an uncommitted batch simply rewrites it); the
+  driver writes the lineage rows an ``Observation`` of that write
+  yields under ``<out>/metrics/batch=<k>/``;
 - a batch is COMMITTED by atomically renaming a manifest into
   ``<out>/_commits/batch-<k>.json`` (os.rename is atomic on POSIX);
 - on restart, committed batches are skipped (the left-anti filter is a
   driver-side bucket-set difference, so no Spark work is scheduled for
   committed data at all).
 
-Batches are pipelined, two in flight: batch k+1's Spark work (redact, raw
-write and read-back, data and metrics writes, error sample) runs on a
+Batches are pipelined, two in flight: batch k+1's Spark work runs on a
 driver worker thread while the caller's thread waits on and commits
 batch k. Commits stay on the caller's thread, strictly in batch order.
 So a crash can leave the files of two uncommitted batches behind (the one
@@ -25,7 +25,7 @@ loop; the resume rewrites both through ``overwrite`` like any uncommitted
 batch.
 
 This is the Parquet+manifest stand-in for an Iceberg catalog: with Iceberg
-jars on the cluster, swap the two ``write.parquet`` calls for
+jars on the cluster, swap the ``write.parquet`` call for
 ``writeTo(...).append()`` and the manifest for Iceberg's snapshot commit —
 the orchestration is unchanged (the sandbox's PySpark ships no Iceberg
 runtime, TESTDATA.md).
@@ -35,14 +35,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from pdfredact_spark.catalog import (
     LOCAL_LEDGER_STORAGE,
@@ -54,10 +57,31 @@ from pdfredact_spark.catalog import (
 from pdfredact_spark.model import Rule
 from pdfredact_spark.pipeline import REDACTED_SCHEMA, redact_full
 
-#: the raw batch output, read back with its schema given so no Spark job
-#: infers it (a new StructType: StructType.add would mutate REDACTED_SCHEMA)
-_RAW_SCHEMA = StructType(
-    REDACTED_SCHEMA.fields + [StructField("bucket", IntegerType(), True)]
+#: ``data/batch=<k>`` and ``data/``: every redacted row plus the partition
+#: columns. Given to reads, so no Spark job infers it and an out_dir with no
+#: data file (empty input) reads as an empty frame. (New field lists:
+#: ``StructType.add`` appends to the list it was built on.)
+_BATCH_SCHEMA = StructType(list(REDACTED_SCHEMA.fields)).add("bucket", IntegerType())
+_DATA_SCHEMA = (
+    StructType(list(REDACTED_SCHEMA.fields)).add("batch", IntegerType()).add("bucket", IntegerType())
+)
+#: the metrics table's lineage columns: type, and the SQL aggregate over one
+#: bucket's clean rows (``{}``: the CASE WHEN selecting them). A 4-bucket
+#: batch's 25 observed aggregates took ~0.01 s of driver time as strings,
+#: 0.13-0.21 s through the Column API (warm local[2] session).
+_LINEAGE = {
+    "doc_id_min": (pa.string(), "min({} doc_id END)"),
+    "doc_id_max": (pa.string(), "max({} doc_id END)"),
+    "n_docs": (pa.int64(), "count({} 1 END)"),
+    "n_spans": (pa.int64(), "sum({} size(spans) END)"),
+    "n_rule_hits": (pa.int64(), "sum({} n_rule_hits END)"),
+    "bytes_processed": (pa.int64(), "sum({} aggregate(spans, 0L, "
+                        "(acc, s) -> acc + length(s.text) + length(s.media_ref) + 8) END)"),
+}
+#: ``metrics/batch=<k>``, written by the driver in read_metrics' schema
+_METRICS_SCHEMA = pa.schema(
+    [("bucket", pa.int32()), *((n, t) for n, (t, _) in _LINEAGE.items()),
+     ("run_id", pa.string()), ("partition_id", pa.int32())]
 )
 #: the most error rows a manifest keeps
 _ERROR_SAMPLE = 100
@@ -186,21 +210,18 @@ def guard_stream_config(
     stamp()
 
 
-def _data_file_listing(out_dir: str, batch_id: int, subdir: str = "data") -> list[list]:
+def _data_file_listing(out_dir: str, batch_id: int) -> list[list]:
     """Sorted ``[relpath, size]`` pairs of the parquet files under
-    ``<subdir>/batch=<k>`` — stamped into the manifest at commit time and
+    ``data/batch=<k>`` — stamped into the manifest at commit time and
     re-verified for every committed batch on every later run (round-7
     cont. third pass). This turns the run lease's one residual window —
     a zombie driver's in-flight Spark file-moves landing in a batch dir
     AFTER a legitimate runner committed it — from silent corruption
     into a loud integrity failure at the next resume, the same way it
-    catches manual tampering or a partial restore. Covers BOTH committed
-    views: ``data`` (the good rows) and ``raw`` (which read_errors reads
-    back — the zombie overwrites raw FIRST, so a kill in that window
-    leaves data intact but the error view silently truncated).
-    Driver-side listing: one walk per batch per run, independent of
-    data size."""
-    base = os.path.join(out_dir, subdir, f"batch={batch_id}")
+    catches manual tampering or a partial restore, of the output and of
+    read_errors' quarantined rows alike. Driver-side listing: one walk
+    per batch per run, independent of data size."""
+    base = os.path.join(out_dir, "data", f"batch={batch_id}")
     out = []
     for root, _dirs, files in os.walk(base):
         for f in files:
@@ -250,7 +271,8 @@ def run_resumable(
 ) -> DataFrame:
     """Resumable redaction over ``docs`` (doc_id, spans).
 
-    Returns the full output DataFrame read back from ``out_dir/data``.
+    Returns the clean rows (doc_id, spans, batch, bucket) read back from
+    ``out_dir/data``, whose quarantined rows :func:`read_errors` reads.
     ``kill_after_batches`` simulates a crash for the resume test.
 
     ``lease_ttl_sec`` guards the run with a storage lease
@@ -278,10 +300,12 @@ def run_resumable(
     exclusion is provable.
 
     Batches run two in flight (module docstring): batch k+1 materializes
-    on a driver worker thread, under the caller's job group, description
-    and tags, while batch k commits. The renewal before each submission
-    keeps the ttl needing to outlast only about one batch. Any exception
-    that ends the run, lease loss and ``KillSwitch`` included, first
+    on a driver worker thread, under the caller's job group and tags, while
+    batch k commits. Each batch's jobs carry the description
+    ``run_resumable <run_id> batch <k>/<n_batches>`` (``k`` as in
+    ``data/batch=<k>``). The renewal before each submission keeps the ttl
+    needing to outlast only about one batch. Any exception that ends the
+    run, lease loss and ``KillSwitch`` included, first
     cancels the Spark jobs of the batches still in flight, so a run that
     will not commit them stops writing at once; a crash that skips it
     leaves at most two uncommitted batches for the resume to overwrite.
@@ -311,27 +335,34 @@ def run_resumable(
             storage.release_lease(lease_path, lease_owner)
 
 
+def _manifest(out_dir: str, batch_id: int) -> dict:
+    """Batch ``batch_id``'s committed manifest. One of the two-write layout
+    (``raw/`` + ``data/``, listing ``raw_files``) fails closed: its data
+    files hold no quarantined rows."""
+    with open(os.path.join(_commit_dir(out_dir), f"batch-{batch_id}.json")) as f:
+        manifest = json.load(f)
+    if "raw_files" in manifest:
+        raise ValueError(
+            f"batch {batch_id} of {out_dir} was committed under the two-write "
+            f"layout (raw/ + data/), whose data files hold no quarantined rows. "
+            f"Re-run into a fresh out_dir."
+        )
+    return manifest
+
+
 def _check_committed(
     out_dir: str, batch_id: int, lo: int, hi: int, n_buckets: int, config_fp: str
 ) -> None:
     """Refuse to skip a committed batch whose manifest does not match this
-    run's partitioning and config, or whose files changed since commit."""
-    # Config-drift guard: a committed manifest written under a
-    # DIFFERENT (n_buckets, buckets_per_batch) covers different
-    # bucket ranges — silently skipping it would drop or double
-    # documents. Resume must use the original partitioning.
-    with open(os.path.join(_commit_dir(out_dir), f"batch-{batch_id}.json")) as f:
-        manifest = json.load(f)
-    if manifest.get("buckets") != list(range(lo, hi)) or (
-        # the modulus matters even when ranges coincide: batch 0
-        # is [0,4) under both n_buckets=8 and 16, but pmod(h,8)
-        # and pmod(h,16) assign DIFFERENT documents to it. A
-        # manifest MISSING the field is a hard error too — it
-        # predates the guard, so its modulus is unverifiable and
-        # defaulting it to the current run's value would pass
-        # exactly the drift case the guard exists for (ADVICE r3).
-        manifest.get("n_buckets") != n_buckets
-    ):
+    run's partitioning and config, or whose files changed since commit:
+    skipping it would drop, double or mix documents. A manifest missing a
+    field predates its guard, so its value is unverifiable: a hard error
+    too, never defaulted to this run's value."""
+    manifest = _manifest(out_dir, batch_id)
+    # the modulus matters even when ranges coincide: batch 0 is [0,4)
+    # under both n_buckets=8 and 16, but pmod(h,8) and pmod(h,16) assign
+    # DIFFERENT documents to it
+    if (manifest.get("buckets"), manifest.get("n_buckets")) != (list(range(lo, hi)), n_buckets):
         raise ValueError(
             f"batch {batch_id} was committed for buckets "
             f"{manifest.get('buckets')} of {manifest.get('n_buckets')} "
@@ -339,12 +370,6 @@ def _check_committed(
             f"— resume with the original n_buckets/buckets_per_batch"
         )
     if manifest.get("config_fp") != config_fp:
-        # Rules/flatten drift (round-5 review): a committed batch
-        # redacted under DIFFERENT rules (or flatten toggle) must
-        # not be silently mixed with this run's output. A
-        # manifest missing the field predates the guard and is
-        # equally unverifiable — hard error, the n_buckets
-        # precedent.
         raise ValueError(
             f"batch {batch_id} was committed under config "
             f"{manifest.get('config_fp')} but this run's rules/"
@@ -353,24 +378,10 @@ def _check_committed(
             "fresh out_dir)"
         )
     listing = _data_file_listing(out_dir, batch_id)
-    raw_listing = _data_file_listing(out_dir, batch_id, "raw")
-    if manifest.get("raw_files") != raw_listing:
-        raise ValueError(
-            f"batch {batch_id}'s raw files do not match its "
-            f"committed manifest: the raw dir (read_errors' "
-            f"source) was modified after commit, or the manifest "
-            f"predates the integrity guard. Re-run this out_dir "
-            f"from scratch or restore the committed files."
-        )
     if manifest.get("data_files") != listing:
-        # Data-integrity guard (round-7 cont. third pass): the
-        # files now present differ from what the committing run
-        # stamped — a zombie runner's late file-moves, manual
-        # tampering, or a partial restore. Mixing them in (or
-        # silently serving fewer rows) is exactly the loss the
-        # manifest exists to prevent. A manifest MISSING the
-        # field predates the guard: unverifiable, hard error
-        # (the n_buckets precedent — manifest v3).
+        # a zombie runner's late file-moves, manual tampering or a partial
+        # restore: mixing them in, or serving fewer rows, is the loss the
+        # manifest exists to prevent
         n_rec = manifest.get("data_files")
         raise ValueError(
             f"batch {batch_id}'s data files do not match its "
@@ -396,81 +407,81 @@ def _materialize(
     n_buckets: int,
     run_id: str,
 ) -> tuple[int, list[dict]]:
-    """Write batch ``batch_id``'s raw, data and metrics dirs and return
+    """Write batch ``batch_id``'s data and metrics dirs and return
     ``(n_errors, error sample)`` for its manifest. Spark work only — it
     touches no commit-log or lease state, so it runs on a worker thread
-    while the caller commits the batch before it."""
+    while the caller commits the batch before it.
+
+    One Spark job writes every row; the metrics and the error count ride
+    on an ``Observation`` of that write (accumulators, which Spark merges
+    once per successful task, so a retried task is not counted twice)."""
     batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-    # Materialize the single-pass result ONCE; good/error views are then
-    # derived from the written files (no recompute of the Python stage).
     full = redact_full(batch.select("doc_id", "spans"), rules, flatten)
     full = full.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
-    raw_path = os.path.join(out_dir, "raw", f"batch={batch_id}")
-    full.write.mode("overwrite").parquet(raw_path)
-    # the schema is known: giving it skips the footer-inference job
-    full = spark.read.schema(_RAW_SCHEMA).parquet(raw_path)
-
-    out = full.where(F.col("error").isNull()).select(
-        "doc_id", "spans", "n_rule_hits",
-        F.size("spans").cast("long").alias("n_spans"), "bucket",
-    )
-    errs = full.where(F.col("error").isNotNull()).select("doc_id", "error")
-
+    when = "CASE WHEN error IS NULL AND bucket = {} THEN"
+    observed = ["count(error) AS n_errors"] + [
+        f"{agg.format(when.format(b))} AS {name}_{b}"
+        for b in range(lo, hi) for name, (_t, agg) in _LINEAGE.items()
+    ]
+    obs = Observation()
     data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
     # Hive-partitioned by bucket: downstream reads of specific buckets
     # prune partitions at planning time (asserted in test_plan_quality).
     (
-        out.select("doc_id", "spans", "bucket")
+        full.observe(obs, *map(F.expr, observed))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(data_path)
     )
+    got = obs.get
 
-    # Lineage rows: one per bucket (the resume partition unit).
-    metrics = (
-        out.groupBy("bucket")
-        .agg(
-            F.min("doc_id").alias("doc_id_min"),
-            F.max("doc_id").alias("doc_id_max"),
-            F.count("*").alias("n_docs"),
-            F.sum("n_spans").alias("n_spans"),
-            F.sum("n_rule_hits").alias("n_rule_hits"),
-            F.sum(
-                F.aggregate(
-                    "spans",
-                    F.lit(0).cast("long"),
-                    lambda acc, s: acc + F.length(s.text) + F.length(s.media_ref) + 8,
-                )
-            ).alias("bytes_processed"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("partition_id", F.col("bucket"))
-    )
+    # Lineage rows: one per bucket with clean rows (the resume partition unit).
+    rows = [
+        {"bucket": b, **{n: got[f"{n}_{b}"] for n in _LINEAGE}, "run_id": run_id,
+         "partition_id": b}
+        for b in range(lo, hi) if got[f"n_docs_{b}"]
+    ]
     metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
-    metrics.write.mode("overwrite").parquet(metrics_path)
+    shutil.rmtree(metrics_path, ignore_errors=True)
+    os.makedirs(metrics_path)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=_METRICS_SCHEMA),
+        os.path.join(metrics_path, "part-00000.parquet"),
+    )
 
-    # Bounded error sample: the manifest keeps at most _ERROR_SAMPLE rows,
-    # so never ship more than that to the driver (a high-error-rate corpus
-    # must not OOM the driver). A short sample IS every error, so the
-    # separate count scan runs only when the sample is full.
-    err_rows = errs.limit(_ERROR_SAMPLE).collect()
-    n_errors = len(err_rows) if len(err_rows) < _ERROR_SAMPLE else errs.count()
+    n_errors = got["n_errors"]
+    if not n_errors:
+        return 0, []
+    # One bounded job: the first _ERROR_SAMPLE error rows by doc id, never
+    # more (a high-error-rate corpus must not OOM the driver).
+    err_rows = (
+        spark.read.schema(_BATCH_SCHEMA).parquet(data_path)
+        .where(F.col("error").isNotNull())
+        .select("doc_id", "error")
+        .orderBy("doc_id", "error")
+        .limit(_ERROR_SAMPLE)
+        .collect()
+    )
     return n_errors, [{"doc_id": r["doc_id"], "error": r["error"]} for r in err_rows]
 
 
-def _tagged(sc, tag: str, fn, *args):
-    """Run ``fn`` with every Spark job it starts carrying job tag ``tag``.
+def _tagged(sc, tag: str, description: str, fn, *args):
+    """Run ``fn`` with every Spark job it starts carrying job tag ``tag``
+    and ``description``; the thread's job group is left as it is.
     A SparkContext job tag, not a session tag: ``SparkSession.interruptTag``
     resolves a tag through the CALLING thread's own tag map, so from the
     committing thread it cancels nothing (measured on pyspark 4.1: it
     returned no operations and the tagged job ran to completion), while
     ``cancelJobsWithTag`` matches the tag wherever the job started."""
+    inherited = sc.getLocalProperty("spark.job.description")
     sc.addJobTag(tag)
+    sc.setJobDescription(description)
     try:
         return fn(*args)
     finally:
+        sc.setJobDescription(inherited)
         sc.removeJobTag(tag)
 
 
@@ -509,7 +520,8 @@ def _run_resumable_batches(
     # and re-processes nothing.
     done = committed_batches(out_dir)
     todo = []
-    for batch_id in range((n_buckets + buckets_per_batch - 1) // buckets_per_batch):
+    n_batches = (n_buckets + buckets_per_batch - 1) // buckets_per_batch
+    for batch_id in range(n_batches):
         lo = batch_id * buckets_per_batch
         hi = min(lo + buckets_per_batch, n_buckets)
         if batch_id in done:
@@ -548,7 +560,6 @@ def _run_resumable_batches(
                 "n_errors": n_errors,
                 "errors": errors,
                 "data_files": _data_file_listing(out_dir, batch_id),
-                "raw_files": _data_file_listing(out_dir, batch_id, "raw"),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },
         )
@@ -580,16 +591,17 @@ def _run_resumable_batches(
                     )
                 tag = f"{run_tag}-batch-{batch_id}"
                 # Wrapped per submission, so each batch's thread gets its
-                # own copy of the caller's job group, description and tags:
-                # one copy shared by two threads would carry one thread's
-                # per-job settings (SQL execution id, batch tag) into the
-                # other's jobs. (With py4j's
-                # pinned threads off there is nothing per-thread to copy,
-                # and the wrapper hands back the session itself.)
+                # own copy of the caller's job group and tags: one copy
+                # shared by two threads would carry one thread's per-job
+                # settings (SQL execution id, batch tag and description)
+                # into the other's jobs. (With py4j's pinned threads off
+                # there is nothing per-thread to copy, and the wrapper
+                # hands back the session itself.)
                 wrap = inheritable_thread_target(spark)
                 target = _tagged if wrap is spark else wrap(_tagged)
                 fut = pool.submit(
-                    target, sc, tag, _materialize, spark, docs, out_dir,
+                    target, sc, tag, f"run_resumable {run_id} batch {batch_id}/{n_batches}",
+                    _materialize, spark, docs, out_dir,
                     batch_id, lo, hi, rules, flatten, n_buckets, run_id,
                 )
                 in_flight.append((batch_id, lo, hi, tag, fut))
@@ -604,30 +616,13 @@ def _run_resumable_batches(
                 _cancel(sc, tag, fut)
             raise
 
-    data_dir = os.path.join(out_dir, "data")
-    for root, _dirs, files in os.walk(data_dir):
-        if any(f.endswith(".parquet") for f in files):
-            return spark.read.parquet(data_dir)
-    # Every batch produced zero clean docs (empty input, or every doc
-    # quarantined by the fail-fast): partitionBy on an empty frame wrote
-    # only _SUCCESS markers, which spark.read.parquet cannot infer a
-    # schema from — return the documented empty shape instead of
-    # crashing AFTER all batches committed.
-    # Schema parity with the populated path (round-5 review): partition
-    # discovery over data/batch=<k>/bucket=<b>/ yields BOTH partition
-    # columns, so the empty frame must carry batch too or callers that
-    # select it break exactly on the edge case this fallback handles.
-    fields = [f for f in REDACTED_SCHEMA.fields if f.name in ("doc_id", "spans")]
-    return spark.createDataFrame(
-        [],
-        StructType(
-            fields
-            + [
-                StructField("batch", IntegerType(), True),
-                StructField("bucket", IntegerType(), True),
-            ]
-        ),
+    return _read_data(spark, out_dir).where(F.col("error").isNull()).select(
+        "doc_id", "spans", "batch", "bucket"
     )
+
+
+def _read_data(spark: SparkSession, out_dir: str) -> DataFrame:
+    return spark.read.schema(_DATA_SCHEMA).parquet(os.path.join(out_dir, "data"))
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -636,6 +631,10 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_errors(spark: SparkSession, out_dir: str) -> DataFrame:
     """Quarantined documents (rotation fail-fast / malformed rows) with
-    their error messages, read back from the materialized raw output."""
-    raw = spark.read.parquet(os.path.join(out_dir, "raw"))
-    return raw.where(F.col("error").isNotNull()).select("doc_id", "error")
+    their error messages: the ``error IS NOT NULL`` rows of ``data/``.
+    Fails closed on an out_dir committed under the two-write layout."""
+    for batch_id in committed_batches(out_dir):
+        _manifest(out_dir, batch_id)
+    return _read_data(spark, out_dir).where(F.col("error").isNotNull()).select(
+        "doc_id", "error"
+    )

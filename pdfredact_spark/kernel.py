@@ -64,6 +64,14 @@ from pdfredact_spark.spanmodel import (
 
 _WS = " \t"
 _WORD_RE = re.compile(r"[^ \t]+")
+# a text span's layout runs: glyph runs joined by ONE space or tab. Inside
+# a run the gap between glyphs is 0 or one 7 pt cell, under the 10.5 pt
+# word gap; two whitespace cells (14 pt) exceed it — so each run is one
+# pass-1 token of the letter loop unless a neighbouring span joins it
+_RUN_RE = re.compile(r"[^ \t]+(?:[ \t][^ \t]+)*")
+# a gap this close to a threshold is decided by the float noise in the
+# letter loop's exact upper-median glyph size: tokenize_runs declines
+_GAP_EPS = 1e-6
 # whitespace OTHER than space/tab (\n, \xa0, \f, ...): the data model
 # treats these as glyph characters (_WORD_RE), but str.split() does not —
 # pages containing them must take the general word path
@@ -93,8 +101,9 @@ class Unit:
 
     ``chars`` lists half-open glyph ranges (span_idx, start, end) — a
     whole word is ONE range, so masking bookkeeping is O(units), not
-    O(glyphs) (a 10x win on realistic pages; single glyphs from the
-    fragment tokenizer are length-1 ranges).
+    O(glyphs) (a 10x win on realistic pages). A fragment token carries one
+    range per non-whitespace run it joins (:func:`tokenize_runs`); only the
+    letter-loop fallback (:func:`tokenize_page`) emits length-1 ranges.
     """
 
     text: str
@@ -314,19 +323,27 @@ def tokenize_page(letters: list[tuple], ) -> list[Unit]:
             baseline = L[4]
     lines.append(current)
 
+    word_gap, digit_gap = _gaps(med_w, med_h)
     tokens: list[Unit] = []
     for line in lines:
-        tokens.extend(_tokens_from_line(line, med_w, med_h))
+        tokens.extend(_tokens_from_line(line, word_gap, digit_gap))
     return tokens
 
 
-def _tokens_from_line(line: list[tuple], med_w: float, med_h: float) -> list[Unit]:
+def _gaps(med_w: float, med_h: float) -> tuple[float, float]:
+    """(word gap, digit gap) of BuildTokensFromLine (:566-659)."""
+    return (
+        max(MIN_GAP, max(med_w * WORD_GAP_MULT, med_h * WORD_H_MULT)),
+        max(MIN_GAP, max(med_w * DIGIT_GAP_MULT, med_h * DIGIT_H_MULT)),
+    )
+
+
+def _tokens_from_line(line: list[tuple], word_gap: float, digit_gap: float) -> list[Unit]:
     """BuildTokensFromLine (PdfPigTextLocator.cs:555-659)."""
     # Sort left asc (:563).
     line = sorted(line, key=lambda L: L[1])
 
     # PASS 1 — conservative word tokens, gap session (:566-592).
-    word_gap = max(MIN_GAP, max(med_w * WORD_GAP_MULT, med_h * WORD_H_MULT))
     base: list[Unit] = []
     run = [line[0]]
     for prev, curr in zip(line, line[1:]):
@@ -337,9 +354,11 @@ def _tokens_from_line(line: list[tuple], med_w: float, med_h: float) -> list[Uni
             base.append(_unit_from_letters(run))
             run = [curr]
     base.append(_unit_from_letters(run))
+    return _join_digit_tokens(base, digit_gap)
 
-    # PASS 2 — join adjacent single-digit tokens into digit runs (:594-659).
-    digit_gap = max(MIN_GAP, max(med_w * DIGIT_GAP_MULT, med_h * DIGIT_H_MULT))
+
+def _join_digit_tokens(base: list[Unit], digit_gap: float) -> list[Unit]:
+    """PASS 2 — join adjacent single-digit tokens into digit runs (:594-659)."""
     final: list[Unit] = []
     pending: list[Unit] = []
     for i, tok in enumerate(base):
@@ -369,6 +388,90 @@ def _unit_from_letters(letters: list[tuple]) -> Unit:
         top=max(L[4] for L in letters),
         chars=[(L[5], L[6], L[6] + 1) for L in letters],
     )
+
+
+def tokenize_runs(
+    texts: list, offsets: list, text_idx: list[int], page_h: float,
+    rows: list | None = None, x0s: list | None = None,
+) -> list[Unit] | None:
+    """TokenizePage built from each text span's layout runs (_RUN_RE)
+    instead of its letters: the tokens of
+    ``tokenize_page(extract_letters(...))``, with one glyph range per
+    non-whitespace run rather than one per glyph.
+
+    Every glyph is GLYPH_W x GLYPH_H, so the page's upper-median glyph
+    size is the model's up to float noise, and rows lie ROW_PITCH apart,
+    far beyond the line tolerance, so each row is one line. Within a row
+    the runs are merged across spans by their x gap (pass 1), then pass 2
+    joins digits as the letter loop does. Returns None — the caller runs
+    the letter loop — when a row's spans interleave in x (the letter sort
+    would mix their glyphs) or a gap lies within _GAP_EPS of a threshold,
+    where that float noise decides. Gaps are computed with the letter
+    loop's own float expressions, so every other comparison agrees."""
+    word_gap, digit_gap = _gaps(GLYPH_W, GLYPH_H)
+    ph_top = page_h - TOP_MARGIN
+    by_row: dict[int, list] = {}
+    for si in text_idx:
+        t = texts[si]
+        runs = [m.span() for m in _RUN_RE.finditer(t)]
+        if not runs:
+            continue
+        if rows is not None:
+            row, x0 = rows[si], x0s[si]
+        else:
+            row, x0, _, _ = _offset_geom(offsets[si], page_h)
+        first = x0 + GLYPH_W * runs[0][0]
+        last = x0 + GLYPH_W * (runs[-1][1] - 1)
+        by_row.setdefault(row, []).append((first, last, si, x0, t, runs))
+
+    tokens: list[Unit] = []
+    for row in sorted(by_row):  # row asc == top desc, the line order
+        top = ph_top - row * ROW_PITCH
+        bottom = top - GLYPH_H
+        spans = by_row[row]
+        if len(spans) > 1:
+            spans.sort()
+            for prev, nxt in zip(spans, spans[1:]):
+                if nxt[0] <= prev[1]:
+                    return None
+        base: list[Unit] = []
+        cur = None
+        for _first, _last, si, x0, t, runs in spans:
+            for a, b in runs:
+                left = x0 + GLYPH_W * a
+                right = (x0 + GLYPH_W * (b - 1)) + GLYPH_W
+                run = t[a:b]
+                if " " in run or "\t" in run:
+                    parts = run.replace("\t", " ").split(" ")
+                    chars = []
+                    pos = a
+                    for part in parts:
+                        chars.append((si, pos, pos + len(part)))
+                        pos += len(part) + 1
+                    run = "".join(parts)
+                else:
+                    chars = [(si, a, b)]
+                if cur is not None:
+                    gap = left - cur.right
+                    if abs(gap - word_gap) <= _GAP_EPS:
+                        return None
+                    if gap <= word_gap:
+                        cur.text += run
+                        cur.right = right
+                        cur.chars.extend(chars)
+                        continue
+                    base.append(cur)
+                cur = Unit(run, left, right, bottom, top, chars)
+        base.append(cur)
+        for tok, nxt in zip(base, base[1:]):
+            if (
+                abs(nxt.left - tok.right - digit_gap) <= _GAP_EPS
+                and _is_single_digit_token(tok.text)
+                and _is_single_digit_token(nxt.text)
+            ):
+                return None
+        tokens.extend(_join_digit_tokens(base, digit_gap))
+    return tokens
 
 
 # ---------------------------------------------------------------------------
@@ -544,8 +647,11 @@ def locate_page(
         word_rules = [r for r in rules if not r.use_fragment_mode()]
 
     if frag_rules:
-        letters = extract_letters(texts, offsets, page.text_idx, page.height)
-        tokens = tokenize_page(letters)
+        tokens = tokenize_runs(texts, offsets, page.text_idx, page.height, rows, x0s)
+        if tokens is None:
+            tokens = tokenize_page(
+                extract_letters(texts, offsets, page.text_idx, page.height)
+            )
         text, starts, ends = build_search_text(tokens)
         folded = _shared_fold(text, frag_rules)
         for rule in frag_rules:

@@ -102,6 +102,20 @@ def _spread_min_bytes() -> int:
         return 3_000_000
 
 
+def _cc_lease_ttl(default: float) -> float:
+    """The CC work-dir lease ttl: PDFREDACT_CC_LEASE_TTL overrides
+    ``default`` (0 disables the lease); a value that is not a finite,
+    non-negative number falls back to ``default``."""
+    import math
+    import os
+
+    try:
+        ttl = float(os.environ["PDFREDACT_CC_LEASE_TTL"])
+    except (KeyError, ValueError):
+        return default
+    return ttl if math.isfinite(ttl) and ttl >= 0 else default
+
+
 def _needs_spread(spark: SparkSession, path: str) -> bool:
     """True when the path cannot feed the cluster's cores (fewer
     splittable units than defaultParallelism) AND is big enough that the
@@ -1317,8 +1331,7 @@ def _connected_components(edges, _rounds: list | None = None,
         from pdfredact_spark.catalog import acquire_lease_blocking, unique_owner
         from pdfredact_spark.checkpoint import KillSwitch
 
-        env_ttl = _os.environ.get("PDFREDACT_CC_LEASE_TTL")
-        ttl = float(env_ttl) if env_ttl is not None else lease_ttl_sec
+        ttl = _cc_lease_ttl(lease_ttl_sec)
         if ttl:
             lease_path = _fs.join(work_dir, "cc.lease")
             lease_owner = unique_owner("cc")

@@ -16,7 +16,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pdfredact_spark.fixtures import demo_doc, page_span, text_span
+from pdfredact_spark.fixtures import boxed_digits, demo_doc, page_span, text_span
 from pdfredact_spark.kernel import locate_document, redact_document
 from pdfredact_spark.model import Rule
 
@@ -270,3 +270,126 @@ def test_mega_doc_offsets_stay_int32():
 
     d = mega_doc("big", 97_000)
     assert max(s["offset"] for s in d["spans"]) <= 2**31 - 1
+
+
+# ---------------------------------------------------------------------------
+# Fragment tokens from span runs vs the letter loop, on multi-span rows
+# ---------------------------------------------------------------------------
+# gaps between one span's text end and the next span's x: abutting (0),
+# overlapping by part of a glyph up to interleaving glyphs (< 0), both
+# thresholds exactly (10.5 word, 35 digit) and either side of them
+_SPAN_GAPS = [0.0, -3.5, -7.0, -14.0, -24.5, 3.5, 10.4, 10.5, 10.6, 14.0, 28.0,
+              34.9, 35.0, 35.1]
+# boxed-digit pitches: glyph gaps 0, 3.5, 7, 8, 10.5 (word gap), 35 (digit
+# gap) and 38.5
+_BOX_PITCHES = [7.0, 10.5, 14.0, 15.0, 17.5, 42.0, 45.5]
+
+
+@st.composite
+def multi_span_rows(draw):
+    """Pages whose rows hold several text spans (x origins off the 7 pt
+    grid, single and double spaces, tabs, Unicode-Nd digits) or boxed
+    digits, so fragment tokens merge across spans and hit every
+    fallback of the run tokenizer."""
+    spans = []
+    for pg in range(1, draw(st.integers(1, 2)) + 1):
+        spans.append(page_span(pg))
+        for row in range(draw(st.integers(1, 4))):
+            if draw(st.integers(0, 3)) == 0:
+                digits = draw(st.text(alphabet="0123456789١٢-", min_size=1, max_size=6))
+                x0 = draw(st.sampled_from([100.0, 72.3]))
+                spans += boxed_digits(pg, row, digits, draw(st.sampled_from(_BOX_PITCHES)), x0)
+                continue
+            x = draw(st.sampled_from([0.0, 72.0, 100.3, 1234.5]))
+            for _ in range(draw(st.integers(1, 4))):
+                text = "".join(draw(st.lists(
+                    st.sampled_from(["1", "2", "9", "٣", "-", "a", "Z", " ", "\t", "  "]),
+                    max_size=7,
+                )))
+                spans.append(text_span(pg, row, x, text))
+                x = max(0.0, round(x + 7.0 * len(text) + draw(st.sampled_from(_SPAN_GAPS)), 1))
+    return {"doc_id": "runs-1", "spans": spans}
+
+
+FRAGMENT_RULES = [
+    Rule("12", fragment_aware=True),
+    Rule("٣-", fragment_aware=True),
+    Rule("9 9"),
+    Rule(r"\d{4}", is_regex=True, fragment_aware=True),
+    Rule(r"\d+", is_regex=True, fragment_aware=True),
+    Rule(r"a\S*", is_regex=True, fragment_aware=True),
+    Rule("aZ"),
+]
+
+
+def _page_tokens(spans):
+    from pdfredact_spark.kernel import (
+        cols_from_spans, extract_letters, split_pages_cols, tokenize_page, tokenize_runs,
+    )
+
+    kinds, texts, _refs, offsets = cols_from_spans(spans)
+    for page in split_pages_cols(kinds, texts, offsets):
+        args = (texts, offsets, page.text_idx, page.height)
+        yield tokenize_runs(*args), tokenize_page(extract_letters(*args))
+
+
+def _glyphs(units):
+    return [sorted((si, k) for si, a, b in u.chars for k in range(a, b)) for u in units]
+
+
+@settings(max_examples=400, deadline=None)
+@given(doc=multi_span_rows())
+def test_run_tokens_equal_letter_loop(doc):
+    for runs, letters in _page_tokens(doc["spans"]):
+        if runs is None:
+            continue  # declined: the caller takes the letter loop
+        assert [(u.text, u.left, u.right, u.bottom, u.top) for u in runs] == [
+            (u.text, u.left, u.right, u.bottom, u.top) for u in letters
+        ]
+        assert _glyphs(runs) == _glyphs(letters)
+        # one glyph range per non-whitespace run, never per glyph
+        assert all(b - a >= 1 for u in runs for _si, a, b in u.chars)
+
+
+@settings(max_examples=200, deadline=None)
+@given(doc=multi_span_rows(), rs=st.lists(st.sampled_from(FRAGMENT_RULES), min_size=1, max_size=3))
+def test_redaction_with_run_tokens_equals_letter_loop(doc, rs):
+    import pdfredact_spark.kernel as K
+
+    def run():
+        out, regions, hits = K.redact_document(doc["doc_id"], doc["spans"], rs)
+        return out, hits, [
+            (r.page, r.x, r.y, r.width, r.height, r.matched_text, r.rule_pattern)
+            for r in regions
+        ]
+
+    fast = run()
+    real = K.tokenize_runs
+    K.tokenize_runs = lambda *a, **k: None
+    try:
+        loop = run()
+    finally:
+        K.tokenize_runs = real
+    assert fast == loop
+
+
+def test_run_tokens_decline_exactly_where_float_noise_or_order_decides():
+    """The run tokenizer takes boxed digits and adjacent spans, and hands
+    the page to the letter loop when a gap sits on a threshold or a row's
+    spans interleave in x."""
+    from pdfredact_spark.fixtures import boxed_digits
+
+    def tokens(spans):
+        (runs, letters), = _page_tokens([page_span(1)] + spans)
+        return runs, [u.text for u in letters]
+
+    for pitch in (15.0, 20.0, 45.5):  # gaps 8, 13 and 38.5 pt: no threshold
+        runs, letters = tokens(boxed_digits(1, 0, "1234", pitch))
+        assert runs is not None and [u.text for u in runs] == letters
+    runs, _ = tokens([text_span(1, 0, 72.0, "ab"), text_span(1, 0, 86.0, "cd 12")])
+    assert [u.text for u in runs] == ["abcd12"]
+    assert runs[0].chars == [(1, 0, 2), (2, 0, 2), (2, 3, 5)]
+    for pitch in (17.5, 42.0):  # gap exactly the word / digit threshold
+        assert tokens(boxed_digits(1, 0, "1234", pitch))[0] is None
+    # the second span starts inside the first one's glyphs
+    assert tokens([text_span(1, 0, 72.0, "abc"), text_span(1, 0, 79.0, "x")])[0] is None

@@ -306,6 +306,23 @@ def test_spread_min_bytes_bad_env_falls_back(monkeypatch):
         assert _spread_min_bytes() == 3_000_000
 
 
+def test_cc_lease_ttl_bad_env_falls_back(monkeypatch):
+    """The CC lease ttl's env knob degrades gracefully: a value that is
+    not a finite, non-negative number falls back to the caller's ttl
+    instead of raising (a non-number) or reaching the lease (nan, a
+    negative or an infinite ttl); 0 still disables the lease."""
+    from pdfredact_spark.queries import _cc_lease_ttl
+
+    monkeypatch.delenv("PDFREDACT_CC_LEASE_TTL", raising=False)
+    assert _cc_lease_ttl(600.0) == 600.0
+    for good, want in (("10", 10.0), ("2.5", 2.5), ("0", 0.0)):
+        monkeypatch.setenv("PDFREDACT_CC_LEASE_TTL", good)
+        assert _cc_lease_ttl(600.0) == want
+    for bad in ("ten", "", "nan", "-1", "inf", "-inf"):
+        monkeypatch.setenv("PDFREDACT_CC_LEASE_TTL", bad)
+        assert _cc_lease_ttl(600.0) == 600.0
+
+
 def test_scan_units_cache_reprobes_on_parallelism_and_rewrite(
     monkeypatch, tmp_path
 ):

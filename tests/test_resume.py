@@ -215,7 +215,9 @@ def test_resume_rejects_modified_committed_data(spark, tmp_path):
     equally hard-fails (the n_buckets precedent)."""
     import json
 
-    docs = docs_to_df(spark, corpus(24))
+    from pdfredact_spark.fixtures import demo_doc
+
+    docs = docs_to_df(spark, corpus(24) + [demo_doc("rot-t", rotation_page1=90)])
     out = str(tmp_path / "o")
     args = dict(n_buckets=8, buckets_per_batch=4)
     run_resumable(spark, docs, out, [SSN_RULE], **args)
@@ -248,20 +250,26 @@ def test_resume_rejects_modified_committed_data(spark, tmp_path):
         fh.write(payload)  # restored: green again
     assert run_resumable(spark, docs, out, [SSN_RULE], **args).count() == 24
 
-    # (c) raw/ (read_errors' source) is guarded too — the zombie
-    # overwrites raw FIRST, so a kill there leaves data intact but the
-    # error view silently truncated without this check
-    raw_victim = next(
+    # (c) the quarantined rows share data/ with the clean ones: a file
+    # that loses its error row (the output intact, read_errors' view
+    # silently truncated) fails the same check
+    import pyarrow.parquet as pq
+
+    err_file = next(
         os.path.join(r, f)
-        for r, _d, fs in os.walk(os.path.join(out, "raw", "batch=0"))
-        for f in sorted(fs) if f.endswith(".parquet")
+        for r, _d, fs in os.walk(os.path.join(out, "data"))
+        for f in sorted(fs)
+        if f.endswith(".parquet")
+        and pq.read_table(os.path.join(r, f)).column("error").null_count
+        < pq.read_metadata(os.path.join(r, f)).num_rows
     )
-    raw_payload = open(raw_victim, "rb").read()
-    os.remove(raw_victim)
-    with pytest.raises(ValueError, match="raw files do not match"):
+    err_payload = open(err_file, "rb").read()
+    table = pq.read_table(err_file)
+    pq.write_table(table.filter(table.column("error").is_null()), err_file)
+    with pytest.raises(ValueError, match="do not match its committed manifest"):
         run_resumable(spark, docs, out, [SSN_RULE], **args)
-    with open(raw_victim, "wb") as fh:
-        fh.write(raw_payload)
+    with open(err_file, "wb") as fh:
+        fh.write(err_payload)
     assert run_resumable(spark, docs, out, [SSN_RULE], **args).count() == 24
 
     # (d) pre-guard manifest: field absent -> unverifiable, hard error
@@ -290,8 +298,8 @@ def test_pipelined_batches_keep_caller_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
-    # 4 batches x (raw write, data write, metrics write, error sample)
-    assert len(tracker.getJobIdsForGroup("resume-caller-group")) >= 16
+    # at least each of the 4 batches' write
+    assert len(tracker.getJobIdsForGroup("resume-caller-group")) >= 4
 
 
 def _outputs(spark, out_dir, df):
@@ -336,3 +344,152 @@ def test_pipelined_failure_cancels_in_flight_batch(spark, tmp_path, monkeypatch)
     ref_dir = str(tmp_path / "ref")
     ref = run_resumable(spark, docs, ref_dir, [SSN_RULE], **args)
     assert _outputs(spark, out, resumed) == _outputs(spark, ref_dir, ref)
+
+
+def test_resume_rejects_two_write_layout(spark, tmp_path):
+    """An out_dir committed under the two-write layout (raw/ for every
+    row, data/ for the clean ones, manifests listing ``raw_files``) has no
+    quarantined rows in data/: resuming over it or reading its errors
+    fails closed instead of serving a silently empty error view."""
+    import json
+
+    from pdfredact_spark.checkpoint import read_errors
+    from pdfredact_spark.fixtures import demo_doc
+
+    docs = docs_to_df(spark, corpus(12) + [demo_doc("rot-o", rotation_page1=90)])
+    out = str(tmp_path / "o")
+    args = dict(n_buckets=8, buckets_per_batch=4)
+    run_resumable(spark, docs, out, [SSN_RULE], **args)
+    mpath = os.path.join(out, "_commits", "batch-1.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    manifest["raw_files"] = []
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    with pytest.raises(ValueError, match="two-write layout"):
+        run_resumable(spark, docs, out, [SSN_RULE], **args)
+    with pytest.raises(ValueError, match="two-write layout"):
+        read_errors(spark, out)
+
+
+def _jobs_of_group(sc, group: str) -> list[tuple[int, str | None]]:
+    """(job id, description) of every job in ``group``, from the status
+    store once the listener bus has delivered every event."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            desc = job.description()
+            out.append((job.jobId(), desc.get() if desc.isDefined() else None))
+    return out
+
+
+def test_batch_jobs_carry_a_description_naming_run_and_batch(spark, tmp_path):
+    """Each batch's Spark jobs are described as ``run_resumable <run_id>
+    batch <k>/<n>``, set on the batch's own thread: the jobs stay in the
+    caller's job group and the caller's own description is untouched."""
+    from pdfredact_spark.fixtures import demo_doc
+
+    sc = spark.sparkContext
+    sc.setJobGroup("describe-group", "caller description")
+    try:
+        run_resumable(
+            spark, docs_to_df(spark, corpus(24) + [demo_doc("rot-d", rotation_page1=90)]),
+            str(tmp_path / "o"), [SSN_RULE], run_id="desc-run",
+            n_buckets=8, buckets_per_batch=2,
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = _jobs_of_group(sc, "describe-group")
+    assert len(jobs) >= 4
+    assert {d for _j, d in jobs} == {f"run_resumable desc-run batch {k}/4" for k in range(4)}
+
+
+_RETRY_PROBE = r"""
+import glob, json, os, sys
+workdir = sys.argv[1]
+
+import pdfredact_spark.pipeline as pipeline
+from pdfredact_spark.checkpoint import read_errors, read_metrics, run_resumable
+from pdfredact_spark.fixtures import SSN_RULE, corpus, demo_doc
+from pdfredact_spark.pipeline import docs_to_df
+from pdfredact_spark.session import get_spark
+
+# local[2,2]: a task may fail once and be retried
+spark = get_spark(master="local[2,2]", app_name="retry-probe", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("ERROR")
+docs = docs_to_df(
+    spark, corpus(60) + [demo_doc(f"rot-{i}", rotation_page1=90) for i in range(8)])
+
+
+def run(name):
+    out = os.path.join(workdir, name)
+    n = run_resumable(spark, docs, out, [SSN_RULE], run_id="r",
+                      n_buckets=8, buckets_per_batch=4).count()
+    manifests = {}
+    for path in sorted(glob.glob(os.path.join(out, "_commits", "batch-*.json"))):
+        m = json.load(open(path))
+        manifests[os.path.basename(path)] = (m["n_errors"], m["errors"])
+    return {
+        "rows": n,
+        "metrics": sorted(list(r) for r in read_metrics(spark, out).collect()),
+        "errors": sorted(list(r) for r in read_errors(spark, out).collect()),
+        "manifests": manifests,
+    }
+
+
+clean = run("clean")
+marker = os.path.join(workdir, "failed-once")
+real = pipeline._make_doc_map_arrow
+
+
+def flaky(rules, flatten):
+    fn = real(rules, flatten)
+
+    def wrapped(batches):
+        # the first task to emit a batch fails right after it: its rows
+        # have passed the observation by then
+        for rb in fn(batches):
+            yield rb
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+            except FileExistsError:
+                continue
+            raise RuntimeError("injected first-attempt failure")
+
+    return wrapped
+
+
+pipeline._make_doc_map_arrow = flaky
+retried = run("retried")
+spark.stop()
+print(json.dumps({"failed": os.path.exists(marker), "clean": clean, "retried": retried}))
+"""
+
+
+def test_observed_metrics_exact_under_task_retry(tmp_path):
+    """The metrics table and the manifests' error counts ride on the
+    write's observation (accumulators). A write task that fails on its
+    first attempt, after its rows passed the observation, and succeeds on
+    retry must leave them equal to a clean run's. A subprocess: the
+    retry needs a local[N,maxFailures] master of its own."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _RETRY_PROBE, str(tmp_path)],
+        capture_output=True, text=True, timeout=420, cwd=repo,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert got["failed"]  # the injected failure really ran
+    assert got["retried"] == got["clean"]
+    assert got["clean"]["rows"] == 60
+    assert sum(n for n, _e in got["clean"]["manifests"].values()) == 8

@@ -55,9 +55,8 @@ docs = corpus(24)
 docs.append(demo_doc("rot-doc", rotation_page1=90))
 df = docs_to_df(spark, docs)
 out1 = os.path.join(out_root, "run1")
-run_resumable(spark, df, out1, [SSN_RULE], n_buckets=4, buckets_per_batch=2)
-
-res = spark.read.parquet(out1 + "/data")
+# the clean output (data/ also holds the quarantined rows, for read_errors)
+res = run_resumable(spark, df, out1, [SSN_RULE], n_buckets=4, buckets_per_batch=2)
 n_docs = res.select("doc_id").distinct().count()
 masked = res.select(
     "doc_id", F.explode("spans").alias("s")
@@ -88,9 +87,9 @@ except KillSwitch as e:
     print("FLOW2 killed as requested:", e)
 first_manifest = os.path.join(out2, "_commits", "batch-0.json")
 mtime1 = os.path.getmtime(first_manifest)
-run_resumable(spark, df, out2, [SSN_RULE], n_buckets=4, buckets_per_batch=2)
+res2 = run_resumable(spark, df, out2, [SSN_RULE], n_buckets=4, buckets_per_batch=2)
 assert os.path.getmtime(first_manifest) == mtime1, "resume rewrote batch 0"
-n2 = spark.read.parquet(out2 + "/data").select("doc_id").distinct().count()
+n2 = res2.select("doc_id").distinct().count()
 print("FLOW2 resumed docs:", n2)
 assert n2 == 24, n2
 
@@ -344,12 +343,12 @@ pre_kill = {
 print("FLOW9 SIGKILLed child after", len(pre_kill), "committed manifest(s)")
 from pdfredact_spark.checkpoint import run_resumable
 
-run_resumable(spark, docs_to_df(spark, corpus(48)), out9, [SSN_RULE],
-              n_buckets=16, buckets_per_batch=2)
+res9 = run_resumable(spark, docs_to_df(spark, corpus(48)), out9, [SSN_RULE],
+                     n_buckets=16, buckets_per_batch=2)
 for f, m in pre_kill.items():
     assert os.path.getmtime(os.path.join(commits9, f)) == m, (
         f"resume rewrote pre-kill manifest {f}")
-n9 = spark.read.parquet(out9 + "/data").select("doc_id").distinct().count()
+n9 = res9.select("doc_id").distinct().count()
 assert n9 == 48, n9
 print("FLOW9 resumed to", n9, "docs; pre-kill manifests untouched")
 
