@@ -7,14 +7,17 @@ input in deterministic PARTITION BUCKETS and commits a manifest per batch:
   — deterministic under retries and across runs;
 - the job loops over bucket batches; each batch writes every row, clean
   and quarantined, once under ``<out>/data/batch=<k>/`` (overwrite-
-  idempotent: a re-run of an uncommitted batch simply rewrites it); the
-  driver writes the lineage rows an ``Observation`` of that write
-  yields under ``<out>/metrics/batch=<k>/``;
+  idempotent: a re-run of an uncommitted batch simply rewrites it) in
+  one Spark job; the driver writes the lineage rows an ``Observation`` of
+  that write yields under ``<out>/metrics/batch=<k>/``, and the write's
+  Arrow stage hands the manifest its error sample through an accumulator;
 - a batch is COMMITTED by atomically renaming a manifest into
   ``<out>/_commits/batch-<k>.json`` (os.rename is atomic on POSIX);
 - on restart, committed batches are skipped (the left-anti filter is a
   driver-side bucket-set difference, so no Spark work is scheduled for
-  committed data at all).
+  committed data at all);
+- every read (the returned frame, ``read_metrics``, ``read_errors``)
+  serves committed batches only.
 
 Batches are pipelined, two in flight: batch k+1's Spark work runs on a
 driver worker thread while the caller's thread waits on and commits
@@ -33,6 +36,7 @@ runtime, TESTDATA.md).
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
 import shutil
@@ -43,8 +47,10 @@ from concurrent.futures import Future, ThreadPoolExecutor, wait
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import IntegerType, StructType
 
 from pdfredact_spark.catalog import (
@@ -57,11 +63,10 @@ from pdfredact_spark.catalog import (
 from pdfredact_spark.model import Rule
 from pdfredact_spark.pipeline import REDACTED_SCHEMA, redact_full
 
-#: ``data/batch=<k>`` and ``data/``: every redacted row plus the partition
-#: columns. Given to reads, so no Spark job infers it and an out_dir with no
-#: data file (empty input) reads as an empty frame. (New field lists:
-#: ``StructType.add`` appends to the list it was built on.)
-_BATCH_SCHEMA = StructType(list(REDACTED_SCHEMA.fields)).add("bucket", IntegerType())
+#: ``data/``: every redacted row plus the partition columns. Given to
+#: reads, so no Spark job infers it and an out_dir with no data file (empty
+#: input) reads as an empty frame. (A new field list: ``StructType.add``
+#: appends to the list it was built on.)
 _DATA_SCHEMA = (
     StructType(list(REDACTED_SCHEMA.fields)).add("batch", IntegerType()).add("bucket", IntegerType())
 )
@@ -83,8 +88,25 @@ _METRICS_SCHEMA = pa.schema(
     [("bucket", pa.int32()), *((n, t) for n, (t, _) in _LINEAGE.items()),
      ("run_id", pa.string()), ("partition_id", pa.int32())]
 )
+#: ``metrics/``, as read_metrics serves it
+_METRICS_READ_SCHEMA = from_arrow_schema(_METRICS_SCHEMA).add("batch", IntegerType())
 #: the most error rows a manifest keeps
 _ERROR_SAMPLE = 100
+
+
+class _ErrorSample(AccumulatorParam):
+    """A batch's manifest error sample as an accumulator: the first
+    ``_ERROR_SAMPLE`` ``(doc_id, error)`` pairs in tuple order: Spark's
+    ``ORDER BY doc_id, error``, as neither is null in an error row
+    (``REDACTED_SCHEMA``'s doc id is not nullable). Each merge keeps only those, so no task ships more than
+    ``_ERROR_SAMPLE`` pairs and the driver keeps no more."""
+
+    def zero(self, value: list) -> list:
+        return []
+
+    def addInPlace(self, value1: list, value2: list) -> list:
+        return heapq.nsmallest(_ERROR_SAMPLE, value1 + value2)
+
 
 class KillSwitch(Exception):
     """Raised by tests to simulate a mid-run job kill."""
@@ -412,11 +434,18 @@ def _materialize(
     touches no commit-log or lease state, so it runs on a worker thread
     while the caller commits the batch before it.
 
-    One Spark job writes every row; the metrics and the error count ride
-    on an ``Observation`` of that write (accumulators, which Spark merges
-    once per successful task, so a retried task is not counted twice)."""
+    One Spark job writes every row; everything else rides on that write's
+    accumulators, which Spark merges once per partition of a result stage,
+    from its first successful attempt, so a retried task is not counted
+    twice. The metrics and the error count come from an ``Observation``;
+    the error sample (the first ``_ERROR_SAMPLE`` error rows by doc id)
+    from an :class:`_ErrorSample` accumulator the doc-batch stage adds its
+    error rows to. The rule-less pass-through has no such stage: there
+    alone the sample is one bounded read-back job of the batch's error
+    rows (NULL-spans rows), run only when the batch has any."""
     batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-    full = redact_full(batch.select("doc_id", "spans"), rules, flatten)
+    sample = spark.sparkContext.accumulator([], _ErrorSample()) if rules or flatten else None
+    full = redact_full(batch.select("doc_id", "spans"), rules, flatten, _error_sample=sample)
     full = full.withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
@@ -452,19 +481,22 @@ def _materialize(
     )
 
     n_errors = got["n_errors"]
-    if not n_errors:
-        return 0, []
-    # One bounded job: the first _ERROR_SAMPLE error rows by doc id, never
-    # more (a high-error-rate corpus must not OOM the driver).
-    err_rows = (
-        spark.read.schema(_BATCH_SCHEMA).parquet(data_path)
-        .where(F.col("error").isNotNull())
-        .select("doc_id", "error")
-        .orderBy("doc_id", "error")
-        .limit(_ERROR_SAMPLE)
-        .collect()
-    )
-    return n_errors, [{"doc_id": r["doc_id"], "error": r["error"]} for r in err_rows]
+    if sample is not None:
+        pairs = sample.value
+    elif n_errors:
+        pairs = (
+            spark.read.schema(_DATA_SCHEMA)
+            .option("basePath", os.path.join(out_dir, "data"))
+            .parquet(data_path)
+            .where(F.col("error").isNotNull())
+            .select("doc_id", "error")
+            .orderBy("doc_id", "error")
+            .limit(_ERROR_SAMPLE)
+            .collect()
+        )
+    else:
+        pairs = []
+    return n_errors, [{"doc_id": d, "error": e} for d, e in pairs]
 
 
 def _tagged(sc, tag: str, description: str, fn, *args):
@@ -616,25 +648,37 @@ def _run_resumable_batches(
                 _cancel(sc, tag, fut)
             raise
 
-    return _read_data(spark, out_dir).where(F.col("error").isNull()).select(
-        "doc_id", "spans", "batch", "bucket"
+    return _read_committed(spark, out_dir, "data", _DATA_SCHEMA).where(
+        F.col("error").isNull()
+    ).select("doc_id", "spans", "batch", "bucket")
+
+
+def _read_committed(spark: SparkSession, out_dir: str, table: str, schema: StructType) -> DataFrame:
+    """The committed batches' rows of ``<out_dir>/<table>``: a crash can
+    leave an uncommitted batch's files behind, which no read may serve.
+    The ``batch`` filter prunes partitions at planning time; with nothing
+    committed the frame is empty."""
+    done = sorted(committed_batches(out_dir))
+    if not done:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema).parquet(os.path.join(out_dir, table))
+        .where(F.col("batch").isin(done))
     )
-
-
-def _read_data(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.schema(_DATA_SCHEMA).parquet(os.path.join(out_dir, "data"))
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "metrics"))
+    """Lineage rows, one per (committed batch, bucket with clean rows)."""
+    return _read_committed(spark, out_dir, "metrics", _METRICS_READ_SCHEMA)
 
 
 def read_errors(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Quarantined documents (rotation fail-fast / malformed rows) with
-    their error messages: the ``error IS NOT NULL`` rows of ``data/``.
-    Fails closed on an out_dir committed under the two-write layout."""
+    """Quarantined documents (rotation fail-fast / malformed rows) of the
+    committed batches with their error messages: the ``error IS NOT NULL``
+    rows of ``data/``. Fails closed on an out_dir committed under the
+    two-write layout."""
     for batch_id in committed_batches(out_dir):
         _manifest(out_dir, batch_id)
-    return _read_data(spark, out_dir).where(F.col("error").isNotNull()).select(
-        "doc_id", "error"
-    )
+    return _read_committed(spark, out_dir, "data", _DATA_SCHEMA).where(
+        F.col("error").isNotNull()
+    ).select("doc_id", "error")

@@ -271,6 +271,24 @@ def _make_doc_map_arrow(rules: list[Rule], flatten: bool):
     return fn
 
 
+def _fold_errors(doc_map, sample):
+    """``doc_map`` with each output batch's ``(doc_id, error)`` pairs added
+    to the accumulator ``sample`` as the batch passes, so the stage that
+    computes the errors also hands them to the driver."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in doc_map(batches):
+            errs = rb.column("error")
+            if errs.null_count < len(errs):
+                sample.add([
+                    (d, e) for d, e in zip(rb.column("doc_id").to_pylist(), errs.to_pylist())
+                    if e is not None
+                ])
+            yield rb
+
+    return fn
+
+
 def _build_redacted_batch(doc_ids, out_k, out_t, out_r, out_o, starts, hits, errs):
     """Assemble a REDACTED_SCHEMA Arrow batch from flat output arrays +
     per-row list starts (None start = null spans for that errored row)."""
@@ -361,6 +379,7 @@ def redact_full(
     flatten: bool = False,
     num_partitions: int | None = None,
     mega_split: bool = False,
+    _error_sample=None,
 ) -> DataFrame:
     """Single-pass fused locate+apply (RedactCommand.cs:126-225 lifecycle).
 
@@ -371,7 +390,16 @@ def redact_full(
 
     Whatever ``df`` is (a parquet scan, a filtered or an in-memory
     frame), Spark's own scan feeds its rows to the Arrow stages, so the
-    input's shape never changes the output rows."""
+    input's shape never changes the output rows.
+
+    ``_error_sample`` (checkpoint's hook): an accumulator that the doc-batch
+    stage adds every error row's ``(doc_id, error)`` pair to. Only that
+    stage can fold them, so it is refused with ``mega_split`` (mega docs'
+    errors come out of a JVM aggregate) and on the rule-less pass-through
+    (no Python stage)."""
+    if _error_sample is not None and (mega_split or not (rules or flatten)):
+        raise ValueError("_error_sample needs the doc-batch stage: no rules "
+                         "and no flatten, or mega_split, would miss error rows")
     if not rules and not flatten:
         # identity pass-through — but NULL-spans garbage rows still route
         # to the error column (round-5 review: every other path routes
@@ -387,6 +415,8 @@ def redact_full(
         )
 
     doc_map = _make_doc_map_arrow(rules, flatten)
+    if _error_sample is not None:
+        doc_map = _fold_errors(doc_map, _error_sample)
     if not mega_split:
         if num_partitions:
             df = df.repartition(num_partitions)

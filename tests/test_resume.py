@@ -5,6 +5,7 @@ batches are not re-processed, (c) lineage metrics cover every partition.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -406,8 +407,123 @@ def test_batch_jobs_carry_a_description_naming_run_and_batch(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = _jobs_of_group(sc, "describe-group")
-    assert len(jobs) >= 4
+    # one job per batch: its write, which also carries the error sample
+    assert len(jobs) == 4
     assert {d for _j, d in jobs} == {f"run_resumable desc-run batch {k}/4" for k in range(4)}
+
+
+def test_reads_serve_committed_batches_only(spark, tmp_path, monkeypatch):
+    """A crash between a batch's write and its manifest commit leaves the
+    batch's data and metrics files behind uncommitted: read_metrics and
+    read_errors serve the committed batches only, and an out_dir with
+    nothing committed reads as empty frames of the same schema."""
+    import pdfredact_spark.checkpoint as checkpoint
+    from pdfredact_spark.checkpoint import read_errors
+    from pdfredact_spark.fixtures import demo_doc
+
+    real = checkpoint._commit
+    crash_at = [1]
+
+    def crashing(out_dir, batch_id, manifest):
+        if batch_id == crash_at[0]:
+            raise KillSwitch(f"crashed before committing batch {batch_id}")
+        real(out_dir, batch_id, manifest)
+
+    docs = docs_to_df(
+        spark, corpus(40) + [demo_doc(f"rot-{i}", rotation_page1=90) for i in range(16)])
+    args = dict(n_buckets=8, buckets_per_batch=2)
+    monkeypatch.setattr(checkpoint, "_commit", crashing)
+    out = str(tmp_path / "o")
+    with pytest.raises(KillSwitch):
+        run_resumable(spark, docs, out, [SSN_RULE], **args)
+    assert committed_batches(out) == {0}
+    # batch 1 was written, metrics and error rows included, not committed
+    written = spark.read.parquet(os.path.join(out, "data"))
+    assert os.path.isdir(os.path.join(out, "metrics", "batch=1"))
+    assert written.where("batch = 1 AND error IS NOT NULL").count() > 0
+
+    metrics = read_metrics(spark, out).collect()
+    clean0 = written.where("batch = 0 AND error IS NULL")
+    assert {r["batch"] for r in metrics} == {0}
+    assert sum(r["n_docs"] for r in metrics) == clean0.count() > 0
+    errors = sorted(tuple(r) for r in read_errors(spark, out).collect())
+    want = written.where("batch = 0 AND error IS NOT NULL").select("doc_id", "error")
+    assert errors == sorted(tuple(r) for r in want.collect())
+    with open(os.path.join(out, "_commits", "batch-0.json")) as fh:
+        assert json.load(fh)["n_errors"] == len(errors) > 0
+
+    crash_at[0] = 0
+    empty = str(tmp_path / "e")
+    with pytest.raises(KillSwitch):
+        run_resumable(spark, docs, empty, [SSN_RULE], **args)
+    assert committed_batches(empty) == set()
+    assert os.path.isdir(os.path.join(empty, "metrics", "batch=0"))
+    assert read_metrics(spark, empty).schema == read_metrics(spark, out).schema
+    assert read_metrics(spark, empty).count() == 0
+    assert read_errors(spark, empty).count() == 0
+
+
+_NULLABLE_DOCS = (
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def _manifest_errors(out_dir: str, batch_id: int) -> tuple[int, list[tuple]]:
+    with open(os.path.join(out_dir, "_commits", f"batch-{batch_id}.json")) as fh:
+        m = json.load(fh)
+    return m["n_errors"], [(e["doc_id"], e["error"]) for e in m["errors"]]
+
+
+def test_error_sample_is_first_rows_by_doc_id_across_tasks(spark, tmp_path):
+    """One batch quarantines more docs than the manifest keeps, spread over
+    seven write tasks: the manifest counts all of them and keeps the first
+    100 in Spark's ``ORDER BY doc_id, error``. ``rot-007`` errs twice, once
+    per error kind, so the error breaks a doc-id tie."""
+    from pdfredact_spark.checkpoint import read_errors
+    from pdfredact_spark.fixtures import demo_doc
+
+    rot = [demo_doc(f"rot-{i * 37 % 150:03d}", rotation_page1=90) for i in range(150)]
+    null_rows = spark.createDataFrame(
+        [("rot-007", None), ("rot-120", None)], _NULLABLE_DOCS)
+    docs = docs_to_df(spark, corpus(30) + rot).unionByName(null_rows).repartition(7)
+    out = str(tmp_path / "o")
+    run_resumable(spark, docs, out, [SSN_RULE], n_buckets=4, buckets_per_batch=4)
+    errors = read_errors(spark, out)
+    first = [tuple(r) for r in errors.orderBy("doc_id", "error").limit(100).collect()]
+    null, rotated = "ValueError: spans column is null", first[0][1]
+    assert first[7:9] == [("rot-007", rotated), ("rot-007", null)]
+    assert _manifest_errors(out, 0) == (errors.count(), first) == (152, first)
+
+
+def test_ruleless_run_samples_null_spans_rows(spark, tmp_path):
+    """With no rules and no flatten there is no Python stage; the manifests
+    still list the NULL-spans rows the pass-through quarantines."""
+    from pdfredact_spark.checkpoint import read_errors
+
+    docs = spark.createDataFrame(
+        [("good", [("text", "x", "", 200_000_720)]), ("null-b", None), ("null-a", None)],
+        _NULLABLE_DOCS,
+    )
+    out = str(tmp_path / "o")
+    clean = run_resumable(spark, docs, out, [], n_buckets=2, buckets_per_batch=2)
+    assert [r["doc_id"] for r in clean.collect()] == ["good"]
+    null = "ValueError: spans column is null"
+    assert _manifest_errors(out, 0) == (2, [("null-a", null), ("null-b", null)])
+    assert sorted(tuple(r) for r in read_errors(spark, out).collect()) == [
+        ("null-a", null), ("null-b", null)]
+
+
+def test_error_sample_hook_needs_the_doc_batch_stage(spark):
+    """The sample hook is refused where error rows bypass the doc-batch
+    stage: mega_split's mega docs and the rule-less pass-through."""
+    from pdfredact_spark.checkpoint import _ErrorSample
+    from pdfredact_spark.pipeline import redact_full
+
+    sample = spark.sparkContext.accumulator([], _ErrorSample())
+    df = docs_to_df(spark, corpus(2))
+    for rules, kw in (([SSN_RULE], {"mega_split": True}), ([], {})):
+        with pytest.raises(ValueError, match="_error_sample"):
+            redact_full(df, rules, _error_sample=sample, **kw)
 
 
 _RETRY_PROBE = r"""

@@ -87,6 +87,20 @@ except KillSwitch as e:
     print("FLOW2 killed as requested:", e)
 first_manifest = os.path.join(out2, "_commits", "batch-0.json")
 mtime1 = os.path.getmtime(first_manifest)
+# the in-flight batch 1 may have written its files before the kill; the
+# reads serve the committed batch 0 only
+from pdfredact_spark.checkpoint import committed_batches, read_errors, read_metrics
+
+assert committed_batches(out2) == {0}, committed_batches(out2)
+m_batches = {r["batch"] for r in read_metrics(spark, out2).collect()}
+with open(first_manifest) as fh:
+    committed_errs = sorted((e["doc_id"], e["error"]) for e in json.load(fh)["errors"])
+errs2 = sorted((r["doc_id"], r["error"]) for r in read_errors(spark, out2).collect())
+print("FLOW2 reads after kill: metrics batches", sorted(m_batches), "errors",
+      [d for d, _e in errs2], "batch 1 files on disk:",
+      os.path.isdir(os.path.join(out2, "metrics", "batch=1")))
+assert m_batches == {0}, m_batches
+assert errs2 == committed_errs, (errs2, committed_errs)
 res2 = run_resumable(spark, df, out2, [SSN_RULE], n_buckets=4, buckets_per_batch=2)
 assert os.path.getmtime(first_manifest) == mtime1, "resume rewrote batch 0"
 n2 = res2.select("doc_id").distinct().count()
