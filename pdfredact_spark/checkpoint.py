@@ -96,16 +96,18 @@ _ERROR_SAMPLE = 100
 
 class _ErrorSample(AccumulatorParam):
     """A batch's manifest error sample as an accumulator: the first
-    ``_ERROR_SAMPLE`` ``(doc_id, error)`` pairs in tuple order: Spark's
-    ``ORDER BY doc_id, error``, as neither is null in an error row
-    (``REDACTED_SCHEMA``'s doc id is not nullable). Each merge keeps only those, so no task ships more than
-    ``_ERROR_SAMPLE`` pairs and the driver keeps no more."""
+    ``_ERROR_SAMPLE`` ``(doc_id, error)`` pairs in Spark's ``ORDER BY
+    doc_id, error``: a NULL doc id (a quarantined row without one) first,
+    as ascending order puts nulls first, then tuple order (an error row's
+    error is never null). Each merge keeps only those, so no task ships
+    more than ``_ERROR_SAMPLE`` pairs and the driver keeps no more."""
 
     def zero(self, value: list) -> list:
         return []
 
     def addInPlace(self, value1: list, value2: list) -> list:
-        return heapq.nsmallest(_ERROR_SAMPLE, value1 + value2)
+        return heapq.nsmallest(
+            _ERROR_SAMPLE, value1 + value2, key=lambda p: (p[0] is not None, p))
 
 
 class KillSwitch(Exception):

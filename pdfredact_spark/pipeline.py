@@ -47,6 +47,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -78,7 +79,7 @@ MEGA_SPAN_THRESHOLD = 4096
 
 REDACTED_SCHEMA = StructType(
     [
-        StructField("doc_id", StringType(), False),
+        StructField("doc_id", StringType(), True),
         StructField("spans", ArrayType(SPAN_STRUCT, False), True),
         StructField("n_rule_hits", LongType(), False),
         StructField("error", StringType(), True),
@@ -112,17 +113,20 @@ def _span_batch_cols(rb, with_refs: bool = True):
     ``ListArray.offsets`` are absolute indices into ``.values`` even for
     sliced arrays, so (offsets[i], offsets[i+1]) ranges stay correct.
 
-    ``valid[i]`` is False for rows whose spans column is NULL (reachable
-    through externally-written parquet with a nullable schema) — callers
-    must route those, never treat them as empty docs. ``with_refs=False``
-    skips the media_ref conversion for locate-only callers.
+    ``valid[i]`` is False for rows whose doc_id or spans column is NULL
+    (reachable through externally-written parquet with a nullable schema)
+    — callers must route those, never treat them as empty docs; it is
+    computed batch-wide, so the per-doc loop does no extra work for it.
+    ``with_refs=False`` skips the media_ref conversion for locate-only
+    callers.
 
     Also derives the per-span offset geometry (bands, rows, x0s) batch-wide
     with numpy — int/float math the kernel would otherwise redo per span in
     Python (_offset_geom was ~5% of the fused kernel's time)."""
-    doc_ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
+    doc_col = rb.column(rb.schema.get_field_index("doc_id"))
+    doc_ids = doc_col.to_pylist()
     spans_col = rb.column(rb.schema.get_field_index("spans"))
-    valid = spans_col.is_valid().to_pylist()
+    valid = pc.and_(doc_col.is_valid(), spans_col.is_valid()).to_pylist()
     bounds = spans_col.offsets.to_pylist()
     flat = spans_col.values
     # A sliced ListArray's .values is the FULL underlying buffer; trim to
@@ -161,8 +165,8 @@ def _span_batch_cols(rb, with_refs: bool = True):
         # Flagged spans (incl. any non-ASCII text) take the exact Python
         # checks — behavior unchanged, just not vectorized.
         try:
-            clean = pa.compute.invert(
-                pa.compute.match_substring_regex(text_arr, "[^ -~]|^ |  | $")
+            clean = pc.invert(
+                pc.match_substring_regex(text_arr, "[^ -~]|^ |  | $")
             ).to_pylist()
         except pa.ArrowInvalid:
             clean = None
@@ -192,6 +196,11 @@ def _decode_lowcard(arr) -> list:
     return [vals[i] for i in idx.tolist()]
 
 
+#: the error of a row quarantined before any kernel call
+_NULL_ID = "ValueError: doc_id is null"
+_NULL_SPANS = "ValueError: spans column is null"
+
+
 def _run_doc_batch(doc_ids, valid, bounds, per_doc):
     """Shared error-routing batch driver for every doc-grain Arrow stage
     (round-5 review: the fused-redact and plan-apply closures carried
@@ -201,10 +210,10 @@ def _run_doc_batch(doc_ids, valid, bounds, per_doc):
     routes the doc to the error column — RotationError keeps the bare
     reference message, anything else is prefixed with its type (a
     10^12-doc corpus WILL contain garbage rows; route them, never fail
-    the job). NULL-spans rows (valid[i] False) are routed up front,
-    never emitted as cleanly-redacted empty documents. Returns the flat
-    output arrays + per-row starts (None start = null spans) ready for
-    _build_redacted_batch."""
+    the job). NULL-id and NULL-spans rows (valid[i] False) are routed up
+    front, never emitted as cleanly-redacted empty documents. Returns the
+    flat output arrays + per-row starts (None start = null spans) ready
+    for _build_redacted_batch."""
     out_k: list = []
     out_t: list = []
     out_r: list = []
@@ -218,7 +227,7 @@ def _run_doc_batch(doc_ids, valid, bounds, per_doc):
         if not valid[i]:
             starts.append(None)
             hits.append(0)
-            errs.append("ValueError: spans column is null")
+            errs.append(_NULL_SPANS if d is not None else _NULL_ID)
             continue
         a, b = bounds[i], bounds[i + 1]
         try:
@@ -401,17 +410,16 @@ def redact_full(
         raise ValueError("_error_sample needs the doc-batch stage: no rules "
                          "and no flatten, or mega_split, would miss error rows")
     if not rules and not flatten:
-        # identity pass-through — but NULL-spans garbage rows still route
-        # to the error column (round-5 review: every other path routes
-        # them; the pass-through emitted them as clean docs)
+        # identity pass-through — but NULL-id and NULL-spans garbage rows
+        # still route to the error column, as on every other path
+        no_id = F.col("doc_id").isNull()
         return df.select(
             "doc_id",
-            "spans",
+            F.when(~no_id, F.col("spans")).alias("spans"),
             F.lit(0).cast("long").alias("n_rule_hits"),
-            F.when(
-                F.col("spans").isNull(),
-                F.lit("ValueError: spans column is null"),
-            ).cast("string").alias("error"),
+            F.when(no_id, F.lit(_NULL_ID))
+            .when(F.col("spans").isNull(), F.lit(_NULL_SPANS))
+            .cast("string").alias("error"),
         )
 
     doc_map = _make_doc_map_arrow(rules, flatten)
@@ -422,11 +430,12 @@ def redact_full(
             df = df.repartition(num_partitions)
         return df.mapInArrow(doc_map, schema=REDACTED_SCHEMA)
 
-    # NULL-spans rows must take the doc-grain branch, where the Arrow
-    # stage routes them to the error output: a bare size() predicate is
-    # NULL for them, so BOTH filters would drop the doc silently
-    # (round-5 review).
-    is_mega = F.coalesce(
+    # NULL-spans and NULL-id rows must take the doc-grain branch, where
+    # the Arrow stage routes them to the error output: a bare size()
+    # predicate is NULL for NULL spans, so BOTH filters would drop the doc
+    # silently (round-5 review), and the mega branch would group every
+    # NULL-id mega doc into one.
+    is_mega = F.col("doc_id").isNotNull() & F.coalesce(
         F.size("spans") > MEGA_SPAN_THRESHOLD, F.lit(False)
     )
 
@@ -536,7 +545,8 @@ def locate_regions(
                     # No error column in REGION_SCHEMA: fail loudly with
                     # the doc id rather than silently dropping the doc
                     # from the plan (matches the old path's hard failure).
-                    raise ValueError(f"doc {d}: spans column is null")
+                    raise ValueError(f"doc {d}: spans column is null"
+                                     if d is not None else "doc_id is null")
                 a, b = bounds[i], bounds[i + 1]
                 g = (
                     (bands[a:b], rows[a:b], x0s[a:b],

@@ -26,82 +26,6 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 
-#: splittable-unit count per parquet path (METADATA only, never results):
-#: parquet parallelizes at row-group grain, so a single-file single-row-
-#: group table — the driver-generated testdata layout — pins every scan
-#: and all pre-exchange map work to ONE task no matter how small
-#: maxPartitionBytes goes (guide §2.5 "input skew: one huge unsplittable
-#: file ... repartition immediately after the read"). Keyed by (path,
-#: parallelism, path mtime): the probe short-circuits at `parallelism`
-#: files, and a table rewritten at the same path must be probed again.
-_SCAN_UNITS_CACHE: dict[tuple[str, int, int | None], tuple[int, int]] = {}
-
-
-def _scan_units(path: str, enough: int) -> tuple[int, int]:
-    """(splittable units, total bytes) of a parquet file/dir: units =
-    row groups across files. Short-circuits at `enough` files (a
-    many-file production table never pays the footer reads), and treats
-    any non-inspectable layout (object store URI, missing path) as
-    already-parallel so the spread becomes a no-op rather than a guess."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-        elif os.path.isfile(path):
-            files = [path]
-        else:
-            return (1 << 30, 0)
-        nbytes = sum(os.path.getsize(f) for f in files)
-        if len(files) >= enough:
-            return (len(files), nbytes)
-        import pyarrow.parquet as pq
-
-        units = max(
-            1, sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        )
-        return (units, nbytes)
-    except Exception:
-        return (1 << 30, 0)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's shuffle width — used
-    right after a scan whose input cannot feed enough tasks, when the
-    per-row work above it (regex/md5/explode/HOF folds) dwarfs one tiny
-    exchange of the rows. PDFREDACT_SCAN_SPREAD=0 disables globally."""
-    import os
-
-    if os.environ.get("PDFREDACT_SCAN_SPREAD", "1") == "0":
-        return df
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = spark.sparkContext.defaultParallelism
-    return df.repartition(n)
-
-
-#: below this many compressed input bytes the repartition's fixed cost
-#: (one exchange round + a full task wave) exceeds what single-core map
-#: work on the data can possibly cost — measured at sf0.1 (0.6 MB
-#: documents): spread=1 lost 0.3-0.7s per query vs spread=0, while at
-#: 10x the bytes it won 2-3x. Irrelevant at production scale (nothing
-#: is MBs); the gate protects small-SF runs. Env-overridable; a value
-#: that is not an integer falls back to the default.
-def _spread_min_bytes() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("PDFREDACT_SPREAD_MIN_BYTES", 3_000_000))
-    except ValueError:
-        return 3_000_000
-
-
 def _cc_lease_ttl(default: float) -> float:
     """The CC work-dir lease ttl: PDFREDACT_CC_LEASE_TTL overrides
     ``default`` (0 disables the lease); a value that is not a finite,
@@ -116,41 +40,9 @@ def _cc_lease_ttl(default: float) -> float:
     return ttl if math.isfinite(ttl) and ttl >= 0 else default
 
 
-def _needs_spread(spark: SparkSession, path: str) -> bool:
-    """True when the path cannot feed the cluster's cores (fewer
-    splittable units than defaultParallelism) AND is big enough that the
-    per-row work plausibly dwarfs one exchange of it. Metadata-only,
-    cached."""
-    import os
-
-    par = spark.sparkContext.defaultParallelism
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (path, par, mtime)
-    probe = _SCAN_UNITS_CACHE.get(key)
-    if probe is None:
-        probe = _scan_units(path, enough=par)
-        _SCAN_UNITS_CACHE[key] = probe
-    units, nbytes = probe
-    return units < par and nbytes >= _spread_min_bytes()
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
-) -> DataFrame:
-    """Read one testdata table. ``spread=True`` re-spreads an
-    unsplittable (fewer row groups than cores) scan across the cluster —
-    only call it where the downstream per-row CPU is the dominant cost;
-    a scan that feeds straight into a shuffle gains nothing. The probe
-    is pure file METADATA (cached per path): at production layouts with
-    >= parallelism files/row-groups it is a no-op."""
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread and _needs_spread(spark, path):
-        df = _spread(df)
-    return df
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -480,7 +372,7 @@ def q_match_counts(spark, sf_dir):
     literal count (replace-based — identical to the reference's IndexOf
     skip-ahead loop for non-self-overlapping patterns,
     PdfPigTextLocator.cs:225-257)."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z]+"), F.lit(0)))
@@ -723,20 +615,14 @@ def q_shipping_priority(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Training-data pipeline operators (north-rule first-class components)
 # ---------------------------------------------------------------------------
-def _docs_with_dups(spark, sf_dir, spread: bool = False):
+def _docs_with_dups(spark, sf_dir):
     """documents plus a deterministic duplicated slice (doc_id<50 re-keyed
-    +100000) so exact/near dedup operators have non-trivial output.
-    ``spread`` re-spreads the union when the underlying table is an
-    unsplittable single-row-group file (filters still push below the
-    repartition to the scan — verified in-plan)."""
+    +100000) so exact/near dedup operators have non-trivial output."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     dup = docs.where(F.col("doc_id") < 50).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
-    un = docs.unionByName(dup)
-    if spread and _needs_spread(spark, f"{sf_dir}/documents.parquet"):
-        un = _spread(un)
-    return un
+    return docs.unionByName(dup)
 
 
 _DOCS_WITH_DUPS_SQL = (
@@ -770,10 +656,6 @@ def _shingles(spark, sf_dir, max_doc_id: int = 100):
     next #3). Docs shorter than 5 chars yield NO shingles — without the
     filter, Spark's sequence(1, 0) DESCENDS ([1, 0]) and fabricates
     phantom shingles the oracle's series-join never emits."""
-    # NO spread here: the graded slice is ~150 docs after pushdown at
-    # every sf, and this subtree is referenced 3-4x by the self-join
-    # queries — measured, a repartition here LOSES at sf0.1 and sf1.0
-    # alike (extra exchange waves, no per-task work to amortize them)
     d = _docs_with_dups(spark, sf_dir).where(
         ((F.col("doc_id") < max_doc_id) | (F.col("doc_id") >= 100000))
         & (F.length("text") >= 5)
@@ -908,7 +790,7 @@ def q_dedup_minhash_lsh(spark, sf_dir, max_doc_id: int = 100):
 def q_simhash_fingerprint(spark, sf_dir):
     """SimHash (32-bit, md5-derived token hashes): per-bit signed vote over
     tokens, fingerprint = sum of winning bits. Deterministic cross-engine."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(F.expr("filter(split(text, ' '), t -> t <> '')")).alias("tok"),
@@ -936,7 +818,7 @@ def q_ann_cosine_topk(spark, sf_dir):
     JVM-side higher-order functions (zip_with + aggregate), no UDF.
     Deterministic tie-break on vec_id. This is the exact baseline; the
     LSH-bucketed variant (q_ann_lsh_topk) is the scale path."""
-    emb = _t(spark, sf_dir, "embeddings", spread=True)
+    emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     # shared bitwise-documented fold helpers (round-5 review: local
     # duplicate lambdas would silently miss a fold-order fix)
@@ -982,7 +864,7 @@ def q_ann_lsh_topk(spark, sf_dir):
 
 
 def _ann_lsh_topk_impl(spark, sf_dir, probe_masks):
-    emb = _t(spark, sf_dir, "embeddings", spread=True)
+    emb = _t(spark, sf_dir, "embeddings")
     planes = 4  # 16 buckets — sized so a bucket holds ~1/16 of the corpus
 
     bucket = _sign_bits(F.col("embedding"), [str(p) for p in range(planes)])
@@ -1051,7 +933,7 @@ def q_ann_batch_topk(spark, sf_dir):
     hyperplanes; candidates = corpus rows sharing a query's bucket
     (bucket-keyed equi-join, tiny query side broadcast), then exact cosine
     re-rank per query. Deterministic ties on vec_id."""
-    emb = _t(spark, sf_dir, "embeddings", spread=True)
+    emb = _t(spark, sf_dir, "embeddings")
 
     bucket = _sign_bits(F.col("embedding"), [str(p) for p in range(4)])
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"))
@@ -1124,12 +1006,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     # Pre-normalize ONCE so the refine stage evaluates a single dot product
     # per candidate pair instead of two norms + a dot.
     norm = _ivf_norm(F.col("embedding"))
-    un = emb.unionByName(dup)
-    if _needs_spread(spark, f"{sf_dir}/embeddings.parquet"):
-        # the normalize + 16-plane interpreted folds below are the cost;
-        # a single-row-group scan would run them on one core
-        un = _spread(un)
-    un = un.select(
+    un = emb.unionByName(dup).select(
         "vec_id", F.transform("embedding", lambda x: x / norm).alias("unit")
     )
 
@@ -1602,7 +1479,7 @@ def q_rolling_fingerprint(spark, sf_dir):
     """Winnowing-style robust document fingerprint: min and max md5-derived
     hash over 8-char shingles + distinct shingle count. Survives local
     edits far from the extrema — the rolling-hash fingerprinting family."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",
         F.explode(
@@ -1838,7 +1715,7 @@ def q_decontaminate_blocklist(spark, sf_dir):
     fingerprint appears in a blocklist (here: fingerprints of doc_id<20
     plus the synthesized duplicates) via broadcast LEFT ANTI join — the
     shuffle-free removal pattern for eval-set leakage at corpus scale."""
-    docs = _docs_with_dups(spark, sf_dir)  # spread measured a LOSS here, like doc_fingerprint
+    docs = _docs_with_dups(spark, sf_dir)
     fp = F.md5(
         F.trim(F.regexp_replace(F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " "))
     )
@@ -1858,7 +1735,7 @@ def q_hash_sample(spark, sf_dir):
     retries, engines, and cluster sizes all reproduce the same split. A
     row qualifying for both methods appears once per method via an
     explode over a literal method array — no second scan, no shuffle."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     bucket = F.conv(F.substring(F.md5("text"), 1, 2), 16, 10).cast("int")
     rate = (
         F.when(F.col("source") == "src0", 51)   # ~20% of 256
@@ -1884,7 +1761,7 @@ def q_duplicate_passages(spark, sf_dir):
     in 2+ DISTINCT docs is a duplication cluster. Shuffle carries
     (hash, doc_id) pairs only; at 100 TB this is the suffix-array-free
     approximation that scales as a plain aggregation."""
-    un = _docs_with_dups(spark, sf_dir, spread=True)
+    un = _docs_with_dups(spark, sf_dir)
     passages = un.where(F.length("text") >= 40).select(
         "doc_id",
         F.explode(
@@ -1909,7 +1786,7 @@ def q_winnowing_fingerprints(spark, sf_dir):
     minimum hash — the selected set is a position-robust fingerprint.
     Pure window functions on both engines; output is the distinct selected
     hash count + min/max selected hash per doc (ints, hash-stable)."""
-    docs = _t(spark, sf_dir, "documents", spread=True).where(F.col("doc_id") < 200)
+    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     grams = docs.select(
         "doc_id",
         F.posexplode(
@@ -1937,7 +1814,7 @@ def q_winnowing_fingerprints(spark, sf_dir):
 
 def q_text_quality(spark, sf_dir):
     """Quality-scoring counters: token / stopword / punct counts per doc."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
     return docs.select(
         "doc_id",
@@ -1955,7 +1832,7 @@ def q_lang_id(spark, sf_dir):
     """Heuristic language-ID: stopword-hit threshold (deterministic,
     SQL-expressible n-gram-class heuristic)."""
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     n_stop = F.expr(f"size(filter(split(text, ' '), t -> t IN ({stop_list})))")
     return docs.select(
         "doc_id",
@@ -1966,7 +1843,7 @@ def q_lang_id(spark, sf_dir):
 def q_doc_fingerprint(spark, sf_dir):
     """Document fingerprint: md5 of normalized text (lower, strip
     non-alnum, collapse whitespace)."""
-    docs = _t(spark, sf_dir, "documents")  # spread measured a LOSS here (regex+md5 per-row overhead does not amortize the exchange)
+    docs = _t(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " "
@@ -1981,7 +1858,7 @@ def q_chunk_documents(spark, sf_dir):
     Pure columnar (sequence -> transform -> explode), no shuffle at all —
     the 100 TB shape is a map-only pass. Chunk identity is (doc_id,
     chunk_id); md5 gives a content key for downstream chunk-level dedup."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     # length>0 guard: sequence(0, -1, 96) throws on empty text, and the
     # oracle's series-join naturally drops zero-length docs — match it.
     chunks = docs.where(F.length("text") > 0).select(
@@ -2010,7 +1887,7 @@ def q_repetition_filter(spark, sf_dir):
     flagged when >20% of its words are repeats — integer arithmetic
     ((n_words - n_distinct) * 5 > n_words), no float hash risk. Two
     map-side partial aggregations on doc_id; no all-pairs anything."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).where(F.col("w") != "")
@@ -2040,16 +1917,16 @@ def q_decontaminate_ngram_overlap(spark, sf_dir):
     either broadcast (small eval sets) or a shuffle join, never a scan of
     document pairs.
 
-    Formulation trade (re-measured round 8): the round-4 window-lead
-    assembly beat the map-only transform() form 2.6x — but only because
-    the single-row-group scan pinned the map-only form to ONE core while
-    the window's exchange spread the gram work across the cluster. With
-    the scan spread (see _t), the map-only form wins: gram assembly +
-    per-doc dedup happen inside the row (array_distinct over the in-doc
-    gram hashes — identical to the former (doc_id, gh) distinct), so the
-    10M-row exchange+sort the window needed disappears; the only
-    remaining exchange is the tiny final per-doc count."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    Formulation trade: gram assembly + per-doc dedup happen inside the
+    row (array_distinct over the in-doc gram hashes — identical to a
+    (doc_id, gh) distinct), so there is no per-gram exchange+sort as in
+    the round-4 window-lead assembly; the only exchange is the tiny
+    final per-doc count. The map-side work runs at the scan's grain (one
+    task per row group): on a single-row-group file the window form
+    measured 2.6x faster, its exchange being what spread the gram work
+    over the cores; a table with as many row groups or files as cores
+    gives the map-only form that parallelism without an exchange."""
+    docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.expr("filter(split(text, ' '), w -> w <> '')").alias("ws"),
@@ -2092,7 +1969,7 @@ def q_curate_corpus(spark, sf_dir):
     )
 
     # exact dedup: keep = min doc_id per content fingerprint
-    fps = _t(spark, sf_dir, "documents", spread=True).select(
+    fps = _t(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("fp")
     )
     keep = fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
@@ -2132,7 +2009,7 @@ def q_curate_corpus(spark, sf_dir):
 
 def q_token_count(spark, sf_dir):
     """BPE-ish token counting: letters-run | digits-run | single symbol."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(

@@ -142,6 +142,48 @@ def test_mega_split_routes_null_spans_and_zeroes_errored_hits(spark):
     assert rows["ok"]["error"] is None
 
 
+def test_null_doc_id_rows_are_quarantined_on_every_path(spark):
+    """A NULL doc_id row routes to the error column with spans=null and
+    no hits, on every path: it used to fail the whole job (a JVM
+    NullPointerException, the output schema's doc_id being non-nullable),
+    and the rule-less pass-through emitted it as a clean doc. Two NULL-id
+    mega docs must not merge into one row on the mega_split path, and
+    locate_regions, which has no error column, names the cause."""
+    from pdfredact_spark.pipeline import PLAN_SCHEMA, apply_plans_full, redact_full
+
+    nullable = (
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    named = docs_to_df(spark, [demo_doc("ok"), mega_doc("big", n_spans=6000)])
+    no_id = docs_to_df(
+        spark, [demo_doc("x"), mega_doc("y", n_spans=6000), mega_doc("z", n_spans=5000)]
+    ).select(F.lit(None).cast("string").alias("doc_id"), "spans")
+    df = named.unionByName(no_id).unionByName(
+        spark.createDataFrame([(None, None), ("null-spans", None)], nullable)
+    )
+    null_id = (None, 0, "ValueError: doc_id is null")
+    null_spans = "ValueError: spans column is null"
+    plans = spark.createDataFrame([], PLAN_SCHEMA)
+    for full in (
+        redact_full(df, [SSN_RULE]),
+        redact_full(df, [SSN_RULE], mega_split=True),
+        redact_full(df, [SSN_RULE], num_partitions=3),
+        redact_full(df, []),
+        apply_plans_full(df, plans),
+    ):
+        rows = full.collect()
+        assert [
+            (r["spans"], r["n_rule_hits"], r["error"]) for r in rows if r["doc_id"] is None
+        ] == [null_id] * 4
+        named_rows = {r["doc_id"]: r for r in rows if r["doc_id"] is not None}
+        assert {d: r["error"] for d, r in named_rows.items()} == {
+            "ok": None, "big": None, "null-spans": null_spans}
+        assert named_rows["ok"]["spans"] and named_rows["big"]["spans"]
+    with pytest.raises(Exception, match="ValueError: doc_id is null"):
+        locate_regions(no_id, [SSN_RULE]).collect()
+
+
 def test_mega_page_apply_quarantines_garbage(spark):
     """Round-5 review: the per-page mega redactor caught only
     RotationError — any other kernel exception from one garbage mega doc

@@ -291,21 +291,6 @@ def test_ngram_jaccard_stays_equi_join(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_spread_min_bytes_bad_env_falls_back(monkeypatch):
-    """The scan-spread size gate's env knob degrades gracefully: a value
-    that is not an integer falls back to the default instead of raising
-    mid-query."""
-    from pdfredact_spark.queries import _spread_min_bytes
-
-    monkeypatch.delenv("PDFREDACT_SPREAD_MIN_BYTES", raising=False)
-    assert _spread_min_bytes() == 3_000_000
-    monkeypatch.setenv("PDFREDACT_SPREAD_MIN_BYTES", "1234")
-    assert _spread_min_bytes() == 1234
-    for bad in ("3MB", "", "1e6"):
-        monkeypatch.setenv("PDFREDACT_SPREAD_MIN_BYTES", bad)
-        assert _spread_min_bytes() == 3_000_000
-
-
 def test_cc_lease_ttl_bad_env_falls_back(monkeypatch):
     """The CC lease ttl's env knob degrades gracefully: a value that is
     not a finite, non-negative number falls back to the caller's ttl
@@ -321,63 +306,3 @@ def test_cc_lease_ttl_bad_env_falls_back(monkeypatch):
     for bad in ("ten", "", "nan", "-1", "inf", "-inf"):
         monkeypatch.setenv("PDFREDACT_CC_LEASE_TTL", bad)
         assert _cc_lease_ttl(600.0) == 600.0
-
-
-def test_scan_units_cache_reprobes_on_parallelism_and_rewrite(
-    monkeypatch, tmp_path
-):
-    """The scan-spread probe is cached per (path, parallelism, mtime). It
-    reads footers only when files are fewer than the parallelism, so a
-    probe taken at a lower parallelism counts files, not row groups, and
-    must not answer for a higher one. A table rewritten at the same path
-    must be probed again too."""
-    import os
-    import shutil
-    from types import SimpleNamespace
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pdfredact_spark import queries
-
-    monkeypatch.setenv("PDFREDACT_SPREAD_MIN_BYTES", "0")
-    monkeypatch.setattr(queries, "_SCAN_UNITS_CACHE", {})
-    probes = []
-    real_scan_units = queries._scan_units
-
-    def counting_scan_units(path, enough):
-        probes.append(enough)
-        return real_scan_units(path, enough)
-
-    monkeypatch.setattr(queries, "_scan_units", counting_scan_units)
-
-    def session(par):
-        return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=par))
-
-    def write_table(path, n_files, groups_per_file):
-        os.makedirs(path)
-        tbl = pa.table({"x": list(range(10 * groups_per_file))})
-        for i in range(n_files):
-            pq.write_table(tbl, f"{path}/part-{i}.parquet", row_group_size=10)
-
-    path = str(tmp_path / "t.parquet")
-    write_table(path, n_files=3, groups_per_file=2)
-
-    # 3 files >= 2: the probe stops at the file count, 3 units -> no spread
-    assert queries._needs_spread(session(2), path) is False
-    assert queries._needs_spread(session(2), path) is False
-    assert probes == [2]
-    # 3 files < 4: footers give 6 row groups -> still no spread. The
-    # stale file-count probe (3 units < 4) would have said spread.
-    assert queries._needs_spread(session(4), path) is False
-    assert probes == [2, 4]
-
-    # rewrite at the same path as one single-row-group file; a rewrite
-    # lands at a later mtime (pinned here so a coarse filesystem clock
-    # cannot make both writes look simultaneous)
-    old_mtime = os.stat(path).st_mtime_ns
-    shutil.rmtree(path)
-    write_table(path, n_files=1, groups_per_file=1)
-    os.utime(path, ns=(old_mtime + 10**9, old_mtime + 10**9))
-    assert queries._needs_spread(session(2), path) is True
-    assert probes == [2, 4, 2]

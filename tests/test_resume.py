@@ -478,21 +478,24 @@ def test_error_sample_is_first_rows_by_doc_id_across_tasks(spark, tmp_path):
     """One batch quarantines more docs than the manifest keeps, spread over
     seven write tasks: the manifest counts all of them and keeps the first
     100 in Spark's ``ORDER BY doc_id, error``. ``rot-007`` errs twice, once
-    per error kind, so the error breaks a doc-id tie."""
+    per error kind, so the error breaks a doc-id tie; the rows without a
+    doc id come first, as Spark orders nulls first."""
     from pdfredact_spark.checkpoint import read_errors
     from pdfredact_spark.fixtures import demo_doc
 
     rot = [demo_doc(f"rot-{i * 37 % 150:03d}", rotation_page1=90) for i in range(150)]
     null_rows = spark.createDataFrame(
-        [("rot-007", None), ("rot-120", None)], _NULLABLE_DOCS)
+        [("rot-007", None), ("rot-120", None), (None, None),
+         (None, [("text", "x", "", 200_000_720)])], _NULLABLE_DOCS)
     docs = docs_to_df(spark, corpus(30) + rot).unionByName(null_rows).repartition(7)
     out = str(tmp_path / "o")
     run_resumable(spark, docs, out, [SSN_RULE], n_buckets=4, buckets_per_batch=4)
     errors = read_errors(spark, out)
     first = [tuple(r) for r in errors.orderBy("doc_id", "error").limit(100).collect()]
-    null, rotated = "ValueError: spans column is null", first[0][1]
-    assert first[7:9] == [("rot-007", rotated), ("rot-007", null)]
-    assert _manifest_errors(out, 0) == (errors.count(), first) == (152, first)
+    null, rotated = "ValueError: spans column is null", first[2][1]
+    assert first[:2] == [(None, "ValueError: doc_id is null")] * 2
+    assert first[9:11] == [("rot-007", rotated), ("rot-007", null)]
+    assert _manifest_errors(out, 0) == (errors.count(), first) == (154, first)
 
 
 def test_ruleless_run_samples_null_spans_rows(spark, tmp_path):
