@@ -5,12 +5,10 @@ input in deterministic PARTITION BUCKETS and commits a manifest per batch:
 
 - every document is assigned ``bucket = pmod(xxhash64(doc_id), n_buckets)``
   — deterministic under retries and across runs;
-- the job loops over bucket batches; each batch writes every row, clean
-  and quarantined, once under ``<out>/data/batch=<k>/`` (overwrite-
-  idempotent: a re-run of an uncommitted batch simply rewrites it) in
-  one Spark job; the driver writes the lineage rows an ``Observation`` of
-  that write yields under ``<out>/metrics/batch=<k>/``, and the write's
-  Arrow stage hands the manifest its error sample through an accumulator;
+- the job loops over bucket batches; each batch is one Spark job whose
+  Arrow stage redacts and writes every row, clean and quarantined, once
+  under ``<out>/data/batch=<k>/bucket=<b>/`` (:func:`_materialize`), and
+  the driver writes its lineage rows under ``<out>/metrics/batch=<k>/``;
 - a batch is COMMITTED by atomically renaming a manifest into
   ``<out>/_commits/batch-<k>.json`` (os.rename is atomic on POSIX);
 - on restart, committed batches are skipped (the left-anti filter is a
@@ -24,14 +22,11 @@ driver worker thread while the caller's thread waits on and commits
 batch k. Commits stay on the caller's thread, strictly in batch order.
 So a crash can leave the files of two uncommitted batches behind (the one
 awaiting its commit and the one in flight), one more than a sequential
-loop; the resume rewrites both through ``overwrite`` like any uncommitted
-batch.
+loop; the resume replaces both like any uncommitted batch.
 
-This is the Parquet+manifest stand-in for an Iceberg catalog: with Iceberg
-jars on the cluster, swap the ``write.parquet`` call for
-``writeTo(...).append()`` and the manifest for Iceberg's snapshot commit —
-the orchestration is unchanged (the sandbox's PySpark ships no Iceberg
-runtime, TESTDATA.md).
+This is the Parquet+manifest stand-in for an Iceberg catalog: task-written
+data files plus one manifest commit is Iceberg's append-files commit (the
+pinned PySpark ships no Iceberg runtime, TESTDATA.md).
 """
 
 from __future__ import annotations
@@ -42,13 +37,15 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark import inheritable_thread_target
-from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import TaskContext, inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import IntegerType, StructType
@@ -61,7 +58,7 @@ from pdfredact_spark.catalog import (
     verify_lease_still_held,
 )
 from pdfredact_spark.model import Rule
-from pdfredact_spark.pipeline import REDACTED_SCHEMA, redact_full
+from pdfredact_spark.pipeline import REDACTED_SCHEMA, _make_doc_map_arrow, _pass_through_arrow
 
 #: ``data/``: every redacted row plus the partition columns. Given to
 #: reads, so no Spark job infers it and an out_dir with no data file (empty
@@ -70,44 +67,154 @@ from pdfredact_spark.pipeline import REDACTED_SCHEMA, redact_full
 _DATA_SCHEMA = (
     StructType(list(REDACTED_SCHEMA.fields)).add("batch", IntegerType()).add("bucket", IntegerType())
 )
-#: the metrics table's lineage columns: type, and the SQL aggregate over one
-#: bucket's clean rows (``{}``: the CASE WHEN selecting them). A 4-bucket
-#: batch's 25 observed aggregates took ~0.01 s of driver time as strings,
-#: 0.13-0.21 s through the Column API (warm local[2] session).
-_LINEAGE = {
-    "doc_id_min": (pa.string(), "min({} doc_id END)"),
-    "doc_id_max": (pa.string(), "max({} doc_id END)"),
-    "n_docs": (pa.int64(), "count({} 1 END)"),
-    "n_spans": (pa.int64(), "sum({} size(spans) END)"),
-    "n_rule_hits": (pa.int64(), "sum({} n_rule_hits END)"),
-    "bytes_processed": (pa.int64(), "sum({} aggregate(spans, 0L, "
-                        "(acc, s) -> acc + length(s.text) + length(s.media_ref) + 8) END)"),
-}
+#: the metrics table's lineage columns, over one bucket's clean rows, with
+#: the meaning of Spark's ``min(doc_id)``, ``max(doc_id)``, ``count(1)``,
+#: ``sum(size(spans))``, ``sum(n_rule_hits)`` and ``sum(aggregate(spans,
+#: 0L, (acc, s) -> acc + length(s.text) + length(s.media_ref) + 8))``
+_LINEAGE = [
+    ("doc_id_min", pa.string()), ("doc_id_max", pa.string()), ("n_docs", pa.int64()),
+    ("n_spans", pa.int64()), ("n_rule_hits", pa.int64()), ("bytes_processed", pa.int64()),
+]
 #: ``metrics/batch=<k>``, written by the driver in read_metrics' schema
 _METRICS_SCHEMA = pa.schema(
-    [("bucket", pa.int32()), *((n, t) for n, (t, _) in _LINEAGE.items()),
-     ("run_id", pa.string()), ("partition_id", pa.int32())]
+    [("bucket", pa.int32()), *_LINEAGE, ("run_id", pa.string()), ("partition_id", pa.int32())]
 )
 #: ``metrics/``, as read_metrics serves it
 _METRICS_READ_SCHEMA = from_arrow_schema(_METRICS_SCHEMA).add("batch", IntegerType())
+#: the row a batch task returns per data file it wrote: the file, the
+#: lineage partials and error count of its rows, its first error rows, and
+#: the task's stage seconds (on the task's first file, 0 on the others)
+_FILE_SCHEMA = pa.schema(
+    [("bucket", pa.int32()), ("file", pa.string()), *_LINEAGE, ("n_errors", pa.int64()),
+     ("errors", pa.list_(pa.struct([("doc_id", pa.string()), ("error", pa.string())]))),
+     ("redact_s", pa.float64()), ("write_s", pa.float64())]
+)
 #: the most error rows a manifest keeps
 _ERROR_SAMPLE = 100
+#: a bucket file buffers this many bytes of rows before writing them as one
+#: row group, so a task whose Arrow batches split across buckets does not
+#: write one small row group per batch
+_ROW_GROUP_BYTES = 32 << 20
 
 
-class _ErrorSample(AccumulatorParam):
-    """A batch's manifest error sample as an accumulator: the first
-    ``_ERROR_SAMPLE`` ``(doc_id, error)`` pairs in Spark's ``ORDER BY
-    doc_id, error``: a NULL doc id (a quarantined row without one) first,
-    as ascending order puts nulls first, then tuple order (an error row's
-    error is never null). Each merge keeps only those, so no task ships
-    more than ``_ERROR_SAMPLE`` pairs and the driver keeps no more."""
+def _first_errors(errors) -> list[dict]:
+    """The first ``_ERROR_SAMPLE`` ``{"doc_id", "error"}`` rows in Spark's
+    ``ORDER BY doc_id, error``: a NULL doc id first, as ascending order puts
+    nulls first (an error row's error is never null)."""
+    return heapq.nsmallest(_ERROR_SAMPLE, errors, key=lambda e: (
+        e["doc_id"] is not None, e["doc_id"] or "", e["error"]))
 
-    def zero(self, value: list) -> list:
-        return []
 
-    def addInPlace(self, value1: list, value2: list) -> list:
-        return heapq.nsmallest(
-            _ERROR_SAMPLE, value1 + value2, key=lambda p: (p[0] is not None, p))
+def _merge(parts: list[dict]) -> dict:
+    """The lineage columns, error count and first error rows of the union
+    of the rows of ``parts``; a lineage column that is NULL in every part
+    stays NULL, as Spark's ``min``, ``max`` and ``sum`` leave it."""
+    def present(k):
+        return [p[k] for p in parts if p[k] is not None]
+
+    sums = {k: sum(v) if (v := present(k)) else None
+            for k in ("n_spans", "n_rule_hits", "bytes_processed")}
+    return {"doc_id_min": min(present("doc_id_min"), default=None),
+            "doc_id_max": max(present("doc_id_max"), default=None),
+            "n_docs": sum(p["n_docs"] for p in parts), **sums,
+            "n_errors": sum(p["n_errors"] for p in parts),
+            "errors": _first_errors(e for p in parts for e in p["errors"])}
+
+
+def _summary(rb: pa.RecordBatch) -> dict:
+    """:func:`_merge`'s fields over the redacted batch ``rb``, the lineage
+    over its clean rows. A doc with a NULL text or media_ref in any span
+    has a NULL ``bytes_processed`` term, which the sum skips, as in Spark."""
+    errors = rb.filter(rb.column("error").is_valid()).select(["doc_id", "error"])
+    rb = rb.filter(rb.column("error").is_null())
+    spans = rb.column("spans")
+    lens = pc.list_value_length(spans).to_numpy(zero_copy_only=False)
+    flat = spans.flatten()
+    term = pc.add(pc.add(pc.utf8_length(pc.struct_field(flat, "text")).cast(pa.int64()),
+                         pc.utf8_length(pc.struct_field(flat, "media_ref"))), 8)
+    # per-doc sums and NULL counts as differences of running sums at the
+    # docs' span bounds (an empty spans array sums to 0)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    total = np.concatenate(([0], np.cumsum(term.fill_null(0).to_numpy(zero_copy_only=False))))
+    nulls = np.concatenate(([0], np.cumsum(term.is_null().to_numpy(zero_copy_only=False))))
+    ok = nulls[ends] == nulls[starts]
+    ids = pc.min_max(rb.column("doc_id"))
+    return {
+        "doc_id_min": ids["min"].as_py(), "doc_id_max": ids["max"].as_py(),
+        "n_docs": rb.num_rows, "n_spans": int(lens.sum()),
+        "n_rule_hits": pc.sum(rb.column("n_rule_hits")).as_py(),
+        "bytes_processed": int((total[ends] - total[starts])[ok].sum()) if ok.any() else None,
+        "n_errors": errors.num_rows, "errors": _first_errors(errors.to_pylist()),
+    }
+
+
+class _BucketFile:
+    """One bucket's data file in one task attempt. Rows are written through
+    one ``ParquetWriter`` in the schema of the stage's output batches, under
+    a hidden name unique to the attempt, which Spark's reader ignores until
+    the driver promotes it; ``row`` is the file's row of ``_FILE_SCHEMA``."""
+
+    def __init__(self, data_path: str, bucket: int, partition: int):
+        name = f"part-{partition:05d}-{uuid.uuid4().hex}.parquet"
+        self.path = os.path.join(data_path, f"bucket={bucket}", "." + name)
+        self.row = {"bucket": bucket, "file": name, **_merge([]), "redact_s": 0.0, "write_s": 0.0}
+        self.buf: list[pa.RecordBatch] = []
+        self.nbytes, self.writer = 0, None
+
+    def add(self, rb: pa.RecordBatch) -> None:
+        self.row.update(_merge([self.row, _summary(rb)]))
+        self.buf.append(rb)
+        self.nbytes += rb.nbytes
+        if self.nbytes >= _ROW_GROUP_BYTES:
+            self._flush()
+
+    def _flush(self) -> None:
+        if self.writer is None:
+            os.makedirs(os.path.dirname(self.path), exist_ok=True)
+            self.writer = pq.ParquetWriter(self.path, self.buf[0].schema)
+        self.writer.write_table(pa.Table.from_batches(self.buf))  # one row group
+        self.buf, self.nbytes = [], 0
+
+    def close(self) -> dict:
+        if self.buf:
+            self._flush()
+        self.writer.close()
+        return self.row
+
+
+def _write_stage(data_path: str, rules: list[Rule], flatten: bool):
+    """A batch's Arrow stage over ``(doc_id, spans, bucket)``: redacts each
+    Arrow batch (the doc-batch redactor, or with no rules and no flatten the
+    pass-through), writes its rows to one :class:`_BucketFile` per bucket,
+    and once its input ends yields one ``_FILE_SCHEMA`` row per file."""
+    redact = _make_doc_map_arrow(rules, flatten) if rules or flatten else _pass_through_arrow
+
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        partition = TaskContext.get().partitionId()
+        files: dict[int, _BucketFile] = {}
+        redact_s = write_s = 0.0
+        for rb in batches:
+            t0 = time.perf_counter()
+            (out,) = redact([rb])
+            t1 = time.perf_counter()
+            bucket = rb.column("bucket")
+            in_batch = pc.unique(bucket).to_pylist()
+            for b in in_batch:
+                if b not in files:
+                    files[b] = _BucketFile(data_path, b, partition)
+                files[b].add(out if len(in_batch) == 1 else out.filter(pc.equal(bucket, b)))
+            redact_s += t1 - t0
+            write_s += time.perf_counter() - t1
+        if not files:
+            return
+        t0 = time.perf_counter()
+        rows = [f.close() for f in files.values()]
+        rows[0]["redact_s"] = redact_s
+        rows[0]["write_s"] = write_s + time.perf_counter() - t0
+        yield pa.RecordBatch.from_pylist(rows, schema=_FILE_SCHEMA)
+
+    return stage
 
 
 class KillSwitch(Exception):
@@ -236,20 +343,21 @@ def guard_stream_config(
 
 def _data_file_listing(out_dir: str, batch_id: int) -> list[list]:
     """Sorted ``[relpath, size]`` pairs of the parquet files under
-    ``data/batch=<k>`` — stamped into the manifest at commit time and
+    ``data/batch=<k>`` that Spark's reader serves (it skips names starting
+    with ``.`` or ``_``) — stamped into the manifest at commit time and
     re-verified for every committed batch on every later run (round-7
-    cont. third pass). This turns the run lease's one residual window —
-    a zombie driver's in-flight Spark file-moves landing in a batch dir
-    AFTER a legitimate runner committed it — from silent corruption
-    into a loud integrity failure at the next resume, the same way it
-    catches manual tampering or a partial restore, of the output and of
-    read_errors' quarantined rows alike. Driver-side listing: one walk
-    per batch per run, independent of data size."""
+    cont. third pass). A late zombie or speculative task attempt can only
+    leave a hidden file, which is never served and not listed; a visible
+    file that appears or changes after commit (a zombie driver, manual
+    tampering, a partial restore) is a loud integrity failure at the next
+    resume, of the output and of read_errors' quarantined rows alike.
+    Driver-side listing: one walk per batch per run, independent of data
+    size."""
     base = os.path.join(out_dir, "data", f"batch={batch_id}")
     out = []
     for root, _dirs, files in os.walk(base):
         for f in files:
-            if f.endswith(".parquet"):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
                 p = os.path.join(root, f)
                 out.append([os.path.relpath(p, base), os.path.getsize(p)])
     return sorted(out)
@@ -428,77 +536,58 @@ def _materialize(
     hi: int,
     rules: list[Rule],
     flatten: bool,
-    n_buckets: int,
     run_id: str,
-) -> tuple[int, list[dict]]:
-    """Write batch ``batch_id``'s data and metrics dirs and return
-    ``(n_errors, error sample)`` for its manifest. Spark work only — it
-    touches no commit-log or lease state, so it runs on a worker thread
-    while the caller commits the batch before it.
-
-    One Spark job writes every row; everything else rides on that write's
-    accumulators, which Spark merges once per partition of a result stage,
-    from its first successful attempt, so a retried task is not counted
-    twice. The metrics and the error count come from an ``Observation``;
-    the error sample (the first ``_ERROR_SAMPLE`` error rows by doc id)
-    from an :class:`_ErrorSample` accumulator the doc-batch stage adds its
-    error rows to. The rule-less pass-through has no such stage: there
-    alone the sample is one bounded read-back job of the batch's error
-    rows (NULL-spans rows), run only when the batch has any."""
-    batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-    sample = spark.sparkContext.accumulator([], _ErrorSample()) if rules or flatten else None
-    full = redact_full(batch.select("doc_id", "spans"), rules, flatten, _error_sample=sample)
-    full = full.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
-    when = "CASE WHEN error IS NULL AND bucket = {} THEN"
-    observed = ["count(error) AS n_errors"] + [
-        f"{agg.format(when.format(b))} AS {name}_{b}"
-        for b in range(lo, hi) for name, (_t, agg) in _LINEAGE.items()
-    ]
-    obs = Observation()
+) -> dict:
+    """Write batch ``batch_id``'s data and metrics dirs in one Spark job and
+    return its manifest's ``n_errors``, ``errors``, ``stage_s`` and
+    ``n_files``. Spark work only — it touches no commit-log or lease state,
+    so it runs on a worker thread while the caller commits the batch before
+    it. Each task writes hidden files (:func:`_write_stage`); ``collect``
+    returns the file rows of each partition's successful attempt only, so
+    the driver promotes exactly those files and deletes everything else in
+    the batch dir (a failed, retried or earlier run's files). A zombie
+    attempt that writes later leaves only a hidden file, which no read
+    serves. Task-written files plus one manifest commit is Iceberg's
+    append-files commit."""
     data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
-    # Hive-partitioned by bucket: downstream reads of specific buckets
-    # prune partitions at planning time (asserted in test_plan_quality).
-    (
-        full.observe(obs, *map(F.expr, observed))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(data_path)
-    )
-    got = obs.get
+    files = [
+        r.asDict(recursive=True) for r in
+        docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
+        .select("doc_id", "spans", "bucket")
+        .mapInArrow(_write_stage(data_path, rules, flatten), schema=from_arrow_schema(_FILE_SCHEMA))
+        .collect()
+    ]
+
+    served = {os.path.join(f"bucket={f['bucket']}", f["file"]) for f in files}
+    for rel in served:
+        d, name = os.path.split(os.path.join(data_path, rel))
+        os.rename(os.path.join(d, "." + name), os.path.join(d, name))
+    for root, _dirs, names in os.walk(data_path):
+        for n in names:
+            if os.path.relpath(os.path.join(root, n), data_path) not in served:
+                os.remove(os.path.join(root, n))
+    os.makedirs(data_path, exist_ok=True)
+    listed = {rel for rel, _size in _data_file_listing(out_dir, batch_id)}
+    if listed != served:
+        raise RuntimeError(f"batch {batch_id}'s visible data files {sorted(listed)} are not "
+                           f"the {sorted(served)} its tasks wrote: another writer is in {data_path}")
 
     # Lineage rows: one per bucket with clean rows (the resume partition unit).
-    rows = [
-        {"bucket": b, **{n: got[f"{n}_{b}"] for n in _LINEAGE}, "run_id": run_id,
-         "partition_id": b}
-        for b in range(lo, hi) if got[f"n_docs_{b}"]
-    ]
+    buckets = [{"bucket": b, **_merge([f for f in files if f["bucket"] == b]),
+                "run_id": run_id, "partition_id": b} for b in range(lo, hi)]
     metrics_path = os.path.join(out_dir, "metrics", f"batch={batch_id}")
     shutil.rmtree(metrics_path, ignore_errors=True)
     os.makedirs(metrics_path)
     pq.write_table(
-        pa.Table.from_pylist(rows, schema=_METRICS_SCHEMA),
+        pa.Table.from_pylist([r for r in buckets if r["n_docs"]], schema=_METRICS_SCHEMA),
         os.path.join(metrics_path, "part-00000.parquet"),
     )
-
-    n_errors = got["n_errors"]
-    if sample is not None:
-        pairs = sample.value
-    elif n_errors:
-        pairs = (
-            spark.read.schema(_DATA_SCHEMA)
-            .option("basePath", os.path.join(out_dir, "data"))
-            .parquet(data_path)
-            .where(F.col("error").isNotNull())
-            .select("doc_id", "error")
-            .orderBy("doc_id", "error")
-            .limit(_ERROR_SAMPLE)
-            .collect()
-        )
-    else:
-        pairs = []
-    return n_errors, [{"doc_id": d, "error": e} for d, e in pairs]
+    batch = _merge(files)
+    return {
+        "n_errors": batch["n_errors"], "errors": batch["errors"],
+        "stage_s": {k: sum(f[f"{k}_s"] for f in files) for k in ("redact", "write")},
+        "n_files": len(files),
+    }
 
 
 def _tagged(sc, tag: str, description: str, fn, *args):
@@ -571,7 +660,7 @@ def _run_resumable_batches(
     def commit_oldest() -> None:
         nonlocal processed
         batch_id, lo, hi, _tag, fut = in_flight[0]
-        n_errors, errors = fut.result()
+        fields = fut.result()
         if _hold_before_commit_sec and processed == 0:
             # drive/test hook: park ONCE before the first commit, lease
             # held, so a second real driver's blocking acquire is provable
@@ -591,8 +680,7 @@ def _run_resumable_batches(
                 "buckets": list(range(lo, hi)),
                 "n_buckets": n_buckets,
                 "config_fp": config_fp,
-                "n_errors": n_errors,
-                "errors": errors,
+                **fields,
                 "data_files": _data_file_listing(out_dir, batch_id),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },
@@ -636,7 +724,7 @@ def _run_resumable_batches(
                 fut = pool.submit(
                     target, sc, tag, f"run_resumable {run_id} batch {batch_id}/{n_batches}",
                     _materialize, spark, docs, out_dir,
-                    batch_id, lo, hi, rules, flatten, n_buckets, run_id,
+                    batch_id, lo, hi, rules, flatten, run_id,
                 )
                 in_flight.append((batch_id, lo, hi, tag, fut))
                 if len(in_flight) == 2:

@@ -32,8 +32,8 @@ Error routing (rotation fail-fast parity, PdfSharpMaskApplicator.cs:95-102)
 is carried as an ``error`` column computed in the same pass — callers split
 good/error rows with a filter instead of an anti-join, so the expensive
 Python stage is never computed twice. Callers that consume BOTH outputs
-should materialize ``redact_full`` once (checkpoint.run_resumable writes it
-to the output table and derives both views from the files).
+should materialize ``redact_full`` once (checkpoint.run_resumable writes
+every row once and derives both views from the files).
 
 Zero row-at-a-time Python anywhere; rules are per-job config closed over
 by the UDF (the docs x rules cartesian with the tiny side broadcast,
@@ -280,22 +280,19 @@ def _make_doc_map_arrow(rules: list[Rule], flatten: bool):
     return fn
 
 
-def _fold_errors(doc_map, sample):
-    """``doc_map`` with each output batch's ``(doc_id, error)`` pairs added
-    to the accumulator ``sample`` as the batch passes, so the stage that
-    computes the errors also hands them to the driver."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in doc_map(batches):
-            errs = rb.column("error")
-            if errs.null_count < len(errs):
-                sample.add([
-                    (d, e) for d, e in zip(rb.column("doc_id").to_pylist(), errs.to_pylist())
-                    if e is not None
-                ])
-            yield rb
-
-    return fn
+def _pass_through_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``redact_full``'s rule-less pass-through as an Arrow stage: spans
+    copied as they are, zero hits, and the same routing of NULL-id and
+    NULL-spans rows to the error column."""
+    for rb in batches:
+        doc_id, spans = rb.column("doc_id"), rb.column("spans")
+        no_id = doc_id.is_null()
+        yield pa.RecordBatch.from_arrays(
+            [doc_id, pc.if_else(no_id, pa.scalar(None, spans.type), spans),
+             pa.array(np.zeros(len(rb), np.int64)),
+             pc.if_else(no_id, _NULL_ID, pc.if_else(spans.is_null(), _NULL_SPANS, None))],
+            names=REDACTED_SCHEMA.names,
+        )
 
 
 def _build_redacted_batch(doc_ids, out_k, out_t, out_r, out_o, starts, hits, errs):
@@ -388,7 +385,6 @@ def redact_full(
     flatten: bool = False,
     num_partitions: int | None = None,
     mega_split: bool = False,
-    _error_sample=None,
 ) -> DataFrame:
     """Single-pass fused locate+apply (RedactCommand.cs:126-225 lifecycle).
 
@@ -399,16 +395,7 @@ def redact_full(
 
     Whatever ``df`` is (a parquet scan, a filtered or an in-memory
     frame), Spark's own scan feeds its rows to the Arrow stages, so the
-    input's shape never changes the output rows.
-
-    ``_error_sample`` (checkpoint's hook): an accumulator that the doc-batch
-    stage adds every error row's ``(doc_id, error)`` pair to. Only that
-    stage can fold them, so it is refused with ``mega_split`` (mega docs'
-    errors come out of a JVM aggregate) and on the rule-less pass-through
-    (no Python stage)."""
-    if _error_sample is not None and (mega_split or not (rules or flatten)):
-        raise ValueError("_error_sample needs the doc-batch stage: no rules "
-                         "and no flatten, or mega_split, would miss error rows")
+    input's shape never changes the output rows."""
     if not rules and not flatten:
         # identity pass-through — but NULL-id and NULL-spans garbage rows
         # still route to the error column, as on every other path
@@ -423,8 +410,6 @@ def redact_full(
         )
 
     doc_map = _make_doc_map_arrow(rules, flatten)
-    if _error_sample is not None:
-        doc_map = _fold_errors(doc_map, _error_sample)
     if not mega_split:
         if num_partitions:
             df = df.repartition(num_partitions)

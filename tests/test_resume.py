@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from pdfredact_spark.checkpoint import (
     KillSwitch,
@@ -212,7 +213,8 @@ def test_resume_rejects_modified_committed_data(spark, tmp_path):
     of a committed batch dir — a zombie runner's late file-moves (the
     run lease's one residual window), tampering, a partial restore —
     fails LOUDLY instead of silently mixing foreign rows or serving
-    fewer. A pre-guard manifest (field absent) is unverifiable and
+    fewer. A hidden file (a late task attempt's) is served by no read
+    and passes. A pre-guard manifest (field absent) is unverifiable and
     equally hard-fails (the n_buckets precedent)."""
     import json
 
@@ -236,6 +238,13 @@ def test_resume_rejects_modified_committed_data(spark, tmp_path):
     with pytest.raises(ValueError, match="do not match its committed manifest"):
         run_resumable(spark, docs, out, [SSN_RULE], **args)
     os.remove(stray)
+    # ... but a late task attempt's hidden file is never served: the
+    # reader and the integrity check both skip it
+    hidden = os.path.join(bucket_dir, ".part-zombie.parquet")
+    with open(hidden, "wb") as fh:
+        fh.write(b"not really parquet")
+    assert run_resumable(spark, docs, out, [SSN_RULE], **args).count() == 24
+    os.remove(hidden)
 
     # (b) a committed file vanishes (the reproduced loss shape)
     victim = next(
@@ -516,24 +525,65 @@ def test_ruleless_run_samples_null_spans_rows(spark, tmp_path):
         ("null-a", null), ("null-b", null)]
 
 
-def test_error_sample_hook_needs_the_doc_batch_stage(spark):
-    """The sample hook is refused where error rows bypass the doc-batch
-    stage: mega_split's mega docs and the rule-less pass-through."""
-    from pdfredact_spark.checkpoint import _ErrorSample
-    from pdfredact_spark.pipeline import redact_full
+#: the metrics table's lineage columns as Spark SQL aggregates over one
+#: bucket's clean rows: the oracle for read_metrics
+_LINEAGE_SQL = {
+    "doc_id_min": "min(doc_id)",
+    "doc_id_max": "max(doc_id)",
+    "n_docs": "count(1)",
+    "n_spans": "sum(size(spans))",
+    "n_rule_hits": "sum(n_rule_hits)",
+    "bytes_processed":
+        "sum(aggregate(spans, 0L, (acc, s) -> acc + length(s.text) + length(s.media_ref) + 8))",
+}
 
-    sample = spark.sparkContext.accumulator([], _ErrorSample())
-    df = docs_to_df(spark, corpus(2))
-    for rules, kw in (([SSN_RULE], {"mega_split": True}), ([], {})):
-        with pytest.raises(ValueError, match="_error_sample"):
-            redact_full(df, rules, _error_sample=sample, **kw)
+
+@pytest.mark.parametrize("rules", [[], [SSN_RULE]], ids=["ruleless", "ssn"])
+def test_metrics_equal_spark_aggregates_of_committed_rows(spark, tmp_path, rules):
+    """read_metrics equals Spark's aggregates over the committed clean
+    rows of data/. A NULL text or media_ref inside one span makes that
+    doc's bytes term NULL, so the sum skips the doc (with rules, a NULL
+    text errs in the kernel and a NULL media_ref passes); ``length``
+    counts characters, not UTF-8 bytes; an empty spans array adds 0; a
+    bucket holding only error rows (NULL spans, NULL doc ids) gets no
+    metrics row."""
+    from pdfredact_spark.checkpoint import read_metrics
+    from pdfredact_spark.fixtures import demo_doc
+
+    def text(t, ref=""):
+        return ("text", t, ref, 200_000_720)
+
+    docs = spark.createDataFrame(
+        [("empty", []), ("null-text", [text("a"), text(None)]), ("null-ref", [text("b", None)]),
+         ("uni", [text("café ünï 😀", "m€dia")]), ("plain", [text("x"), text("yz")])]
+        + [(f"err-{i}", None) for i in range(40)] + [(None, None), (None, [text("c")])],
+        _NULLABLE_DOCS)
+    docs = docs.unionByName(docs_to_df(spark, [demo_doc("rot-m", rotation_page1=90)]))
+    out = str(tmp_path / "o")
+    run_resumable(spark, docs, out, rules, n_buckets=8, buckets_per_batch=4)
+
+    data = spark.read.parquet(os.path.join(out, "data"))
+    names = list(_LINEAGE_SQL)
+    want = (data.where("error IS NULL").groupBy("batch", "bucket")
+            .agg(*(F.expr(e).alias(n) for n, e in _LINEAGE_SQL.items())))
+    got = read_metrics(spark, out)
+    assert (sorted(tuple(r) for r in got.select("batch", "bucket", *names).collect())
+            == sorted(tuple(r) for r in want.select("batch", "bucket", *names).collect()))
+    # the cases above really occurred
+    clean_ids = {r["doc_id"] for r in data.where("error IS NULL").collect()}
+    assert clean_ids == {"empty", "null-ref", "uni", "plain"} | (set() if rules else {"null-text", "rot-m"})
+    error_only = data.groupBy("bucket").agg(F.count("error").alias("e"), F.count("*").alias("n"))
+    assert error_only.where("e = n").count() > 0
+    assert data.where("doc_id IS NULL").count() == 2
 
 
 _RETRY_PROBE = r"""
 import glob, json, os, sys
 workdir = sys.argv[1]
 
-import pdfredact_spark.pipeline as pipeline
+import pyarrow.parquet as pq
+
+import pdfredact_spark.checkpoint as checkpoint
 from pdfredact_spark.checkpoint import read_errors, read_metrics, run_resumable
 from pdfredact_spark.fixtures import SSN_RULE, corpus, demo_doc
 from pdfredact_spark.pipeline import docs_to_df
@@ -548,55 +598,72 @@ docs = docs_to_df(
 
 def run(name):
     out = os.path.join(workdir, name)
-    n = run_resumable(spark, docs, out, [SSN_RULE], run_id="r",
-                      n_buckets=8, buckets_per_batch=4).count()
-    manifests = {}
+    df = run_resumable(spark, docs, out, [SSN_RULE], run_id="r",
+                       n_buckets=8, buckets_per_batch=4)
+    manifests, listed = {}, set()
     for path in sorted(glob.glob(os.path.join(out, "_commits", "batch-*.json"))):
         m = json.load(open(path))
-        manifests[os.path.basename(path)] = (m["n_errors"], m["errors"])
+        listed |= {os.path.join(f"batch={m['batch_id']}", f) for f, _size in m["data_files"]}
+        for k in ("committed_at", "data_files", "stage_s"):
+            del m[k]
+        manifests[os.path.basename(path)] = m
+    data = os.path.join(out, "data")
+    on_disk = {os.path.relpath(os.path.join(r, f), data)
+               for r, _d, fs in os.walk(data) for f in fs}
     return {
-        "rows": n,
+        "rows": sorted([r["doc_id"], [list(s) for s in r["spans"]], r["batch"], r["bucket"]]
+                       for r in df.collect()),
         "metrics": sorted(list(r) for r in read_metrics(spark, out).collect()),
         "errors": sorted(list(r) for r in read_errors(spark, out).collect()),
         "manifests": manifests,
+        "unlisted_files": sorted(on_disk - listed),
     }
 
 
 clean = run("clean")
 marker = os.path.join(workdir, "failed-once")
-real = pipeline._make_doc_map_arrow
+real = checkpoint._write_stage
 
 
-def flaky(rules, flatten):
-    fn = real(rules, flatten)
+def flaky(data_path, rules, flatten):
+    stage = real(data_path, rules, flatten)
 
     def wrapped(batches):
-        # the first task to emit a batch fails right after it: its rows
-        # have passed the observation by then
-        for rb in fn(batches):
-            yield rb
+        # the first task to finish fails once its stage has closed its
+        # files: complete parquet files, on disk under hidden names
+        for rb in stage(batches):
             try:
-                os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+                fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             except FileExistsError:
+                yield rb
                 continue
+            paths = [os.path.join(data_path, f"bucket={b}", "." + f) for b, f in
+                     zip(rb.column("bucket").to_pylist(), rb.column("file").to_pylist())]
+            rows = sum(pq.read_metadata(p).num_rows for p in paths)
+            with os.fdopen(fd, "w") as fh:
+                json.dump({"paths": paths, "rows": rows}, fh)
             raise RuntimeError("injected first-attempt failure")
 
     return wrapped
 
 
-pipeline._make_doc_map_arrow = flaky
+checkpoint._write_stage = flaky
 retried = run("retried")
 spark.stop()
-print(json.dumps({"failed": os.path.exists(marker), "clean": clean, "retried": retried}))
+failed = json.load(open(marker))
+failed["left"] = [p for p in failed["paths"]
+                  if os.path.exists(p) or os.path.exists(p.replace("/.part-", "/part-"))]
+print(json.dumps({"failed": failed, "clean": clean, "retried": retried}))
 """
 
 
-def test_observed_metrics_exact_under_task_retry(tmp_path):
-    """The metrics table and the manifests' error counts ride on the
-    write's observation (accumulators). A write task that fails on its
-    first attempt, after its rows passed the observation, and succeeds on
-    retry must leave them equal to a clean run's. A subprocess: the
-    retry needs a local[N,maxFailures] master of its own."""
+def test_batch_output_exact_under_task_retry(tmp_path):
+    """A batch task that fails on its first attempt after closing its
+    complete data files, and succeeds on retry, leaves rows, metrics,
+    read_errors and manifests equal to a clean run's, and the batch dirs
+    hold only the files the manifests list: the failed attempt's hidden
+    files are gone. A subprocess: the retry needs a local[N,maxFailures]
+    master of its own."""
     import json
     import subprocess
     import sys
@@ -608,7 +675,10 @@ def test_observed_metrics_exact_under_task_retry(tmp_path):
     )
     assert res.returncode == 0, res.stderr[-2000:]
     got = json.loads(res.stdout.strip().splitlines()[-1])
-    assert got["failed"]  # the injected failure really ran
+    failed = got["failed"]
+    assert failed["paths"] and failed["rows"] > 0  # the injected failure really ran
+    assert failed["left"] == []
     assert got["retried"] == got["clean"]
-    assert got["clean"]["rows"] == 60
-    assert sum(n for n, _e in got["clean"]["manifests"].values()) == 8
+    assert got["clean"]["unlisted_files"] == []
+    assert len(got["clean"]["rows"]) == 60
+    assert sum(m["n_errors"] for m in got["clean"]["manifests"].values()) == 8
