@@ -58,7 +58,7 @@ from pdfredact_spark.catalog import (
     verify_lease_still_held,
 )
 from pdfredact_spark.model import Rule
-from pdfredact_spark.pipeline import REDACTED_SCHEMA, _make_doc_map_arrow, _pass_through_arrow
+from pdfredact_spark.pipeline import REDACTED_SCHEMA, _make_doc_map_arrow, _pass_through
 
 #: ``data/``: every redacted row plus the partition columns. Given to
 #: reads, so no Spark job infers it and an out_dir with no data file (empty
@@ -91,9 +91,9 @@ _FILE_SCHEMA = pa.schema(
 )
 #: the most error rows a manifest keeps
 _ERROR_SAMPLE = 100
-#: a bucket file buffers this many bytes of rows before writing them as one
-#: row group, so a task whose Arrow batches split across buckets does not
-#: write one small row group per batch
+#: the most bytes of rows a batch task buffers over all its bucket files;
+#: past it, the largest buffer is written as one row group, so row groups
+#: are not one per Arrow batch and memory does not grow with the buckets
 _ROW_GROUP_BYTES = 32 << 20
 
 
@@ -150,10 +150,11 @@ def _summary(rb: pa.RecordBatch) -> dict:
 
 
 class _BucketFile:
-    """One bucket's data file in one task attempt. Rows are written through
-    one ``ParquetWriter`` in the schema of the stage's output batches, under
-    a hidden name unique to the attempt, which Spark's reader ignores until
-    the driver promotes it; ``row`` is the file's row of ``_FILE_SCHEMA``."""
+    """One bucket's data file in one task attempt. Rows buffered by ``add``
+    are written as one row group by ``flush``, through one ``ParquetWriter``
+    in the schema of the stage's output batches, under a hidden name unique
+    to the attempt, which Spark's reader ignores until the driver promotes
+    it; ``row`` is the file's row of ``_FILE_SCHEMA``."""
 
     def __init__(self, data_path: str, bucket: int, partition: int):
         name = f"part-{partition:05d}-{uuid.uuid4().hex}.parquet"
@@ -166,10 +167,8 @@ class _BucketFile:
         self.row.update(_merge([self.row, _summary(rb)]))
         self.buf.append(rb)
         self.nbytes += rb.nbytes
-        if self.nbytes >= _ROW_GROUP_BYTES:
-            self._flush()
 
-    def _flush(self) -> None:
+    def flush(self) -> None:
         if self.writer is None:
             os.makedirs(os.path.dirname(self.path), exist_ok=True)
             self.writer = pq.ParquetWriter(self.path, self.buf[0].schema)
@@ -178,17 +177,19 @@ class _BucketFile:
 
     def close(self) -> dict:
         if self.buf:
-            self._flush()
+            self.flush()
         self.writer.close()
         return self.row
 
 
 def _write_stage(data_path: str, rules: list[Rule], flatten: bool):
-    """A batch's Arrow stage over ``(doc_id, spans, bucket)``: redacts each
-    Arrow batch (the doc-batch redactor, or with no rules and no flatten the
-    pass-through), writes its rows to one :class:`_BucketFile` per bucket,
-    and once its input ends yields one ``_FILE_SCHEMA`` row per file."""
-    redact = _make_doc_map_arrow(rules, flatten) if rules or flatten else _pass_through_arrow
+    """A batch's Arrow stage: redacts each Arrow batch of ``(doc_id, spans,
+    bucket)`` (with no rules and no flatten its input is already redacted
+    by ``pipeline._pass_through``), writes its rows to one :class:`_BucketFile`
+    per bucket, and at the end yields one ``_FILE_SCHEMA`` row per file."""
+    redact = (_make_doc_map_arrow(rules, flatten) if rules or flatten
+              else lambda batches: (rb.select(REDACTED_SCHEMA.names) for rb in batches))
+    cap = _ROW_GROUP_BYTES  # read on the driver, shipped with the stage
 
     def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         partition = TaskContext.get().partitionId()
@@ -204,6 +205,8 @@ def _write_stage(data_path: str, rules: list[Rule], flatten: bool):
                 if b not in files:
                     files[b] = _BucketFile(data_path, b, partition)
                 files[b].add(out if len(in_batch) == 1 else out.filter(pc.equal(bucket, b)))
+            while sum(f.nbytes for f in files.values()) >= cap:
+                max(files.values(), key=lambda f: f.nbytes).flush()
             redact_s += t1 - t0
             write_s += time.perf_counter() - t1
         if not files:
@@ -550,10 +553,11 @@ def _materialize(
     serves. Task-written files plus one manifest commit is Iceberg's
     append-files commit."""
     data_path = os.path.join(out_dir, "data", f"batch={batch_id}")
+    batch = docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
     files = [
         r.asDict(recursive=True) for r in
-        docs.filter((F.col("bucket") >= lo) & (F.col("bucket") < hi))
-        .select("doc_id", "spans", "bucket")
+        (batch.select("doc_id", "spans", "bucket") if rules or flatten
+         else _pass_through(batch, "bucket"))
         .mapInArrow(_write_stage(data_path, rules, flatten), schema=from_arrow_schema(_FILE_SCHEMA))
         .collect()
     ]

@@ -201,6 +201,14 @@ _NULL_ID = "ValueError: doc_id is null"
 _NULL_SPANS = "ValueError: spans column is null"
 
 
+def _check_span_fields(kinds: list, refs: list) -> None:
+    """Raise for a NULL span kind or media_ref in a doc's output: the
+    output's span struct cannot hold one, so it would fail the whole job
+    in the JVM instead of quarantining the doc."""
+    if None in kinds or None in refs:
+        raise ValueError("span kind or media_ref is null")
+
+
 def _run_doc_batch(doc_ids, valid, bounds, per_doc):
     """Shared error-routing batch driver for every doc-grain Arrow stage
     (round-5 review: the fused-redact and plan-apply closures carried
@@ -232,6 +240,7 @@ def _run_doc_batch(doc_ids, valid, bounds, per_doc):
         a, b = bounds[i], bounds[i + 1]
         try:
             k, t, r, o, h = per_doc(i, d, a, b)
+            _check_span_fields(k, r)
             starts.append(len(out_k))
             out_k += k
             out_t += t
@@ -280,19 +289,20 @@ def _make_doc_map_arrow(rules: list[Rule], flatten: bool):
     return fn
 
 
-def _pass_through_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """``redact_full``'s rule-less pass-through as an Arrow stage: spans
-    copied as they are, zero hits, and the same routing of NULL-id and
-    NULL-spans rows to the error column."""
-    for rb in batches:
-        doc_id, spans = rb.column("doc_id"), rb.column("spans")
-        no_id = doc_id.is_null()
-        yield pa.RecordBatch.from_arrays(
-            [doc_id, pc.if_else(no_id, pa.scalar(None, spans.type), spans),
-             pa.array(np.zeros(len(rb), np.int64)),
-             pc.if_else(no_id, _NULL_ID, pc.if_else(spans.is_null(), _NULL_SPANS, None))],
-            names=REDACTED_SCHEMA.names,
-        )
+def _pass_through(df: DataFrame, *keep: str) -> DataFrame:
+    """The rule-less, non-flatten redaction: spans as they are, zero hits,
+    but NULL-id and NULL-spans garbage rows still route to the error
+    column, as on every other path. The ``keep`` columns ride along."""
+    no_id = F.col("doc_id").isNull()
+    return df.select(
+        "doc_id",
+        F.when(~no_id, F.col("spans")).alias("spans"),
+        F.lit(0).cast("long").alias("n_rule_hits"),
+        F.when(no_id, F.lit(_NULL_ID))
+        .when(F.col("spans").isNull(), F.lit(_NULL_SPANS))
+        .cast("string").alias("error"),
+        *keep,
+    )
 
 
 def _build_redacted_batch(doc_ids, out_k, out_t, out_r, out_o, starts, hits, errs):
@@ -333,6 +343,7 @@ def _make_page_apply(rules: list[Rule], flatten: bool):
             k, t, r, o, _, h = redact_document_cols(
                 doc_id, kinds, texts, refs, offs, rules, flatten=flatten
             )
+            _check_span_fields(k, r)
         except Exception as e:  # noqa: BLE001 — malformed mega docs too
             # Same routing contract as the doc-grain path (round-5
             # review: catching only RotationError let one garbage MEGA
@@ -397,17 +408,7 @@ def redact_full(
     frame), Spark's own scan feeds its rows to the Arrow stages, so the
     input's shape never changes the output rows."""
     if not rules and not flatten:
-        # identity pass-through — but NULL-id and NULL-spans garbage rows
-        # still route to the error column, as on every other path
-        no_id = F.col("doc_id").isNull()
-        return df.select(
-            "doc_id",
-            F.when(~no_id, F.col("spans")).alias("spans"),
-            F.lit(0).cast("long").alias("n_rule_hits"),
-            F.when(no_id, F.lit(_NULL_ID))
-            .when(F.col("spans").isNull(), F.lit(_NULL_SPANS))
-            .cast("string").alias("error"),
-        )
+        return _pass_through(df)
 
     doc_map = _make_doc_map_arrow(rules, flatten)
     if not mega_split:

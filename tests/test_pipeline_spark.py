@@ -113,23 +113,6 @@ def test_empty_rules_routes_null_spans(spark):
     assert err == {"nullrow": "ValueError: spans column is null"}
 
 
-def test_arrow_pass_through_equals_jvm_pass_through(spark):
-    """The resumable batch stage's rule-less Arrow pass-through routes rows
-    exactly as redact_full's JVM pass-through: NULL-id and NULL-spans rows
-    to the error column, everything else (NULLs inside spans, empty
-    spans) copied with zero hits."""
-    from pdfredact_spark.pipeline import _pass_through_arrow, redact_full
-
-    nullable = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    df = spark.createDataFrame(
-        [("good", [("text", "x", "", 200_000_720)]), ("null-spans", None), (None, None),
-         (None, [("text", "y", "", 200_000_720)]), ("empty", []),
-         ("null-inside", [("text", None, None, 200_000_720)])], nullable)
-    arrow = df.mapInArrow(_pass_through_arrow, f"{nullable}, n_rule_hits long, error string")
-    assert sorted(map(str, arrow.collect())) == sorted(map(str, redact_full(df, []).collect()))
-    assert arrow.where("error IS NOT NULL").count() == 3
-
-
 def test_mega_split_routes_null_spans_and_zeroes_errored_hits(spark):
     """Round-5 review, two mega-path parity holes: (1) a NULL-spans row
     made BOTH mega filters NULL, silently dropping the doc from both

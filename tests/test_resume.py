@@ -542,8 +542,9 @@ _LINEAGE_SQL = {
 def test_metrics_equal_spark_aggregates_of_committed_rows(spark, tmp_path, rules):
     """read_metrics equals Spark's aggregates over the committed clean
     rows of data/. A NULL text or media_ref inside one span makes that
-    doc's bytes term NULL, so the sum skips the doc (with rules, a NULL
-    text errs in the kernel and a NULL media_ref passes); ``length``
+    doc's bytes term NULL, so the sum skips the doc (with rules, both are
+    quarantined: a NULL text errs in the kernel, and the output cannot
+    hold a NULL media_ref); ``length``
     counts characters, not UTF-8 bytes; an empty spans array adds 0; a
     bucket holding only error rows (NULL spans, NULL doc ids) gets no
     metrics row."""
@@ -571,10 +572,85 @@ def test_metrics_equal_spark_aggregates_of_committed_rows(spark, tmp_path, rules
             == sorted(tuple(r) for r in want.select("batch", "bucket", *names).collect()))
     # the cases above really occurred
     clean_ids = {r["doc_id"] for r in data.where("error IS NULL").collect()}
-    assert clean_ids == {"empty", "null-ref", "uni", "plain"} | (set() if rules else {"null-text", "rot-m"})
+    assert clean_ids == {"empty", "uni", "plain"} | (set() if rules else {"null-text", "null-ref", "rot-m"})
     error_only = data.groupBy("bucket").agg(F.count("error").alias("e"), F.count("*").alias("n"))
     assert error_only.where("e = n").count() > 0
     assert data.where("doc_id IS NULL").count() == 2
+
+
+def test_null_span_kind_or_media_ref_is_quarantined_on_every_path(spark, tmp_path):
+    """With rules, a doc whose span has a NULL kind or media_ref is an
+    error row on redact_full's paths and in run_resumable alike. The
+    output's span fields are non-nullable: redact_full used to fail the
+    whole job (a JVM NullPointerException) on such a doc, while
+    run_resumable, which writes the stage's batches itself, committed it
+    as clean."""
+    from pdfredact_spark.checkpoint import read_errors
+    from pdfredact_spark.fixtures import mega_doc
+    from pdfredact_spark.pipeline import redact_full
+
+    big = mega_doc("mega-null-ref", n_spans=5000)  # > MEGA_SPAN_THRESHOLD
+    big["spans"][7]["media_ref"] = None
+    docs = spark.createDataFrame(
+        [("null-ref", [("text", "b", None, 200_000_720)]),
+         ("null-kind", [(None, "b", "", 200_000_720)]),
+         ("ok", [("text", "b", "", 200_000_720)]),
+         (big["doc_id"], [tuple(s.values()) for s in big["spans"]])],
+        _NULLABLE_DOCS)
+    err = "ValueError: span kind or media_ref is null"
+    want = [("mega-null-ref", err), ("null-kind", err), ("null-ref", err)]
+    for full in (redact_full(docs, [SSN_RULE]), redact_full(docs, [SSN_RULE], mega_split=True)):
+        assert sorted(tuple(r) for r in full.where("error IS NOT NULL")
+                      .select("doc_id", "error").collect()) == want
+    out = str(tmp_path / "o")
+    clean = run_resumable(spark, docs, out, [SSN_RULE], n_buckets=2, buckets_per_batch=2)
+    assert [r["doc_id"] for r in clean.collect()] == ["ok"]
+    assert sorted(tuple(r) for r in read_errors(spark, out).collect()) == want
+
+
+def test_buffer_cap_splits_row_groups_without_changing_output(spark, tmp_path, monkeypatch):
+    """With the batch tasks' buffer cap at 1 KB and a few docs per Arrow
+    batch, the data files hold many row groups; rows, metrics, read_errors
+    and the manifests' errors equal those of a run at the default cap,
+    whose files hold one row group each."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    import pdfredact_spark.checkpoint as checkpoint
+    from pdfredact_spark.checkpoint import read_errors
+    from pdfredact_spark.fixtures import demo_doc
+
+    docs = docs_to_df(
+        spark, corpus(60) + [demo_doc(f"rot-{i}", rotation_page1=90) for i in range(4)]
+    ).repartition(2)
+
+    def run(name):
+        out = str(tmp_path / name)
+        df = run_resumable(spark, docs, out, [SSN_RULE], n_buckets=8, buckets_per_batch=4)
+        groups = [pq.ParquetFile(p).num_row_groups
+                  for p in glob.glob(os.path.join(out, "data", "*", "*", "*.parquet"))]
+        return groups, {
+            "rows": sorted((r["doc_id"], str(r["spans"]), r["batch"], r["bucket"])
+                           for r in df.collect()),
+            "metrics": sorted(map(tuple, read_metrics(spark, out).collect())),
+            "errors": sorted(map(tuple, read_errors(spark, out).collect())),
+            "manifest_errors": [_manifest_errors(out, k) for k in (0, 1)],
+        }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        default_groups, default = run("default")
+        monkeypatch.setattr(checkpoint, "_ROW_GROUP_BYTES", 1024)
+        capped_groups, capped = run("capped")
+    finally:
+        spark.conf.set(key, before)
+    assert capped == default
+    assert len(default["rows"]) == 60 and default["errors"]
+    assert set(default_groups) == {1}
+    assert max(capped_groups) > 2
 
 
 _RETRY_PROBE = r"""
